@@ -102,7 +102,9 @@ object Bench {
     // its OWN cached workspace (Cfg.work embeds the batch count): ~4 GB
     // more tmpfs alongside part 2's, generated once per boot — the same
     // events in a different batch layout cannot share a log dir.
-    val epochs = sys.env.getOrElse("SPARK_GRAFT_BENCH_EPOCHS", "8").toInt
+    val epochsEnv = sys.env.getOrElse("SPARK_GRAFT_BENCH_EPOCHS", "8")
+    val epochs = epochsEnv.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_BENCH_EPOCHS must be an integer epoch count (0 or 1 disables), got '$epochsEnv'"))
     val cdcIncr =
       if (epochs <= 1) ""
       else {

@@ -228,8 +228,8 @@ object StreamingReplay {
     // NOTE: the two branches are two scans of the same files per trigger
     // (json parses twice). The split must live in the PLAN — a null event
     // time must never reach the stateful operator — and mirrors the
-    // merge's own measured re-read-over-cache choice (MergeInto
-    // cacheSource scaladoc); the poison branch is empty on healthy logs.
+    // merge's own re-read-over-cache choice (its touched-bucket scan
+    // re-parses the source); the poison branch is empty on healthy logs.
     val stream = deduped.unionByName(base.where(!statefulOk))
     // The listener filters on runId, which is only known AFTER start():
     // a batch completing in that window is dropped by the listener and

@@ -26,8 +26,8 @@ import java.nio.charset.StandardCharsets
 final case class FileEntry(
     bucket: Int,
     relPath: String,
-    /** Per-file lsn range + row count, read from the parquet footer at
-      * commit time (the reference's row-group min/max statistics,
+    /** Per-file lsn range + row count, gathered by the write tasks (the
+      * reference's row-group min/max statistics,
       * src/places/place_index.rs:426-444, recorded in the manifest so
       * readers prune without opening files). `nKeys = -1` marks a legacy
       * entry without stats; the lsn sentinels are then conservative
@@ -36,41 +36,37 @@ final case class FileEntry(
     maxLsn: Long = Long.MaxValue,
     nKeys: Long = -1L,
     /** File length in bytes (from the commit-time listing — free); lets
-      * scans split large files into byte-range partitions without an FS
-      * stat per file at planning. -1 = unknown (legacy entry). */
+      * reads plan and split files without an FS stat per file. -1 =
+      * unknown (legacy entry). */
     nBytes: Long = -1L,
     /** Rows with `_deleted = false` — the file's contribution to the
       * VISIBLE row count, which is what lets `SELECT count(*)` answer
-      * from the manifest with zero data IO. Computed at commit from the
-      * boolean row-group statistics (free when every row group is
-      * all-live or all-tombstone; a mixed row group costs one
-      * single-column read of the file). -1 = unknown (legacy entry or
-      * unreadable stats); readers must then fall back. */
+      * from the manifest with zero data IO. Counted by the write tasks; a
+      * NULL flag is not live. -1 = unknown (legacy entry); readers must
+      * then fall back. */
     nLive: Long = -1L,
     /** Per-file KEY ranges (min/max of the `repo` and `path` columns,
-      * from the parquet footer's binary column statistics). Lets a point
-      * lookup (`repo = x [AND path = y]`) prune at FILE granularity on
-      * the driver, before any task launches. The ranges BITE on
+      * gathered by the write tasks). Lets a point lookup (`repo = x [AND
+      * path = y]`) prune at FILE granularity on the driver, before any
+      * task launches. The ranges BITE on
       * compaction's byte-budget splits, which are range-partitioned on
       * (bucket, repo, path) and therefore KEY-DISJOINT — a lookup plans
       * exactly the one range file of its bucket; the merge's salt files
       * spread keys by hash, so their ranges overlap and survive the
       * filter (row-group stats bound IO inside them instead). Order is
       * UNSIGNED UTF-8 BYTE order (parquet's binary stats order — NOT
-      * String.compareTo). Truncated footer stats stay sound: parquet
-      * truncation only widens the range. null = unknown (legacy entry /
-      * absent stats) — never prunable. */
+      * String.compareTo). null = unknown (legacy entry / a bound past
+      * FileStatsTracker.MaxKeyStatBytes) — never prunable. */
     minRepo: String = null,
     maxRepo: String = null,
     minPath: String = null,
     maxPath: String = null,
     /** Base64 bloom over the file's DISTINCT paths (see [[PathBloom]]),
-      * built from the path column's dictionary pages at commit time.
+      * built by the write tasks.
       * Closes the pruning gap the ranges cannot: a compacted multi-repo
       * file spans nearly the whole path domain, so a `path = x` lookup
       * WITHOUT a repo never prunes on [minPath, maxPath] alone. null =
-      * absent (legacy entry / non-dictionary path column / over the size
-      * cap) — never prunable. */
+      * absent (legacy entry / over the size cap) — never prunable. */
     pathBloom: String = null
 ) {
   def hasStats: Boolean = nKeys >= 0L
@@ -246,8 +242,8 @@ object Snapshot {
     }
   }
 
-  /** Stats serialize INDEPENDENTLY: a file whose lsn footer stats were
-    * unreadable still keeps its known nBytes (from the listing), nLive,
+  /** Stats serialize INDEPENDENTLY: a file whose lsn stats were
+    * absent still keeps its known nBytes (from the listing), nLive,
     * and key ranges — gating everything behind one hasStats check would
     * needlessly degrade byte-budget admission, split sizing,
     * estimateStatistics, LIMIT planning and COUNT(*) to their no-stats
@@ -593,260 +589,26 @@ final class LakeTable(
     }.toSeq
   }
 
-  /** `listDataFiles` plus per-file (min_lsn, max_lsn, n_rows) read from
-    * the parquet FOOTERS — metadata-only IO, no Spark job, parallel
-    * across files. This is how the commit path records the stats readers
-    * later prune by (reference: footer statistics extraction,
-    * src/places/place_index.rs:107-145). Files without an lsn column
-    * keep the conservative no-stats sentinel. */
-  def listDataFilesWithStats(dirName: String): Seq[FileEntry] = {
-    import scala.jdk.CollectionConverters._
-    val entries = listDataFiles(dirName)
-    val conf = hconf
-    val rootPath = root
-    entries.asJava.parallelStream().map[FileEntry] { e =>
-      try {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new Path(s"$rootPath/${e.relPath}"), conf)
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try {
-          val blocks = reader.getFooter.getBlocks.asScala
-          val nRows = blocks.map(_.getRowCount).sum
-          var mn = Long.MaxValue; var mx = Long.MinValue; var ok = nRows > 0
-          blocks.foreach { b =>
-            b.getColumns.asScala.find(_.getPath.toDotString == "lsn") match {
-              case Some(c) =>
-                val st = c.getStatistics
-                if (st == null || st.isEmpty || !st.hasNonNullValue) ok = false
-                else (st.genericGetMin, st.genericGetMax) match {
-                  case (lo: java.lang.Long, hi: java.lang.Long) =>
-                    mn = math.min(mn, lo); mx = math.max(mx, hi)
-                  case _ => ok = false
-                }
-              case None => ok = false
-            }
-          }
-          // per-file key ranges from the repo/path binary column stats —
-          // unsigned-byte min/max across row groups (parquet's own stats
-          // order). Any block without usable stats → no key stats for the
-          // file (conservative: mayContain stays true).
-          def binRange(colName: String): Option[(String, String)] = {
-            import LakeTable.bytesLe
-            var lo: Array[Byte] = null; var hi: Array[Byte] = null
-            blocks.foreach { b =>
-              if (b.getRowCount > 0) b.getColumns.asScala.find(_.getPath.toDotString == colName) match {
-                case Some(c) =>
-                  val st = c.getStatistics
-                  if (st == null || st.isEmpty || !st.hasNonNullValue) return None
-                  (st.genericGetMin, st.genericGetMax) match {
-                    case (mnB: org.apache.parquet.io.api.Binary, mxB: org.apache.parquet.io.api.Binary) =>
-                      val (mb, xb) = (mnB.getBytes, mxB.getBytes)
-                      if (lo == null || bytesLe(mb, lo)) lo = mb
-                      if (hi == null || bytesLe(hi, xb)) hi = xb
-                    case _ => return None
-                  }
-                case None => return None
-              }
-            }
-            if (lo == null) None
-            else {
-              // stats truncation can cut a bound mid-UTF-8-sequence (or
-              // increment the last byte of a truncated max past validity);
-              // decoding such bytes to String is LOSSY (U+FFFD), and the
-              // re-encoded bound that mayContain later compares can land
-              // on the WRONG side of real keys — pruning live files. Only
-              // bounds that round-trip exactly are usable; otherwise the
-              // file keeps no key stats (conservative, never prunable).
-              val loS = new String(lo, StandardCharsets.UTF_8)
-              val hiS = new String(hi, StandardCharsets.UTF_8)
-              if (java.util.Arrays.equals(loS.getBytes(StandardCharsets.UTF_8), lo) &&
-                  java.util.Arrays.equals(hiS.getBytes(StandardCharsets.UTF_8), hi))
-                Some((loS, hiS))
-              else None
-            }
-          }
-          val keyRange: Option[(String, String, String, String)] =
-            if (nRows == 0) None
-            else for ((rLo, rHi) <- binRange("repo"); (pLo, pHi) <- binRange("path"))
-              yield (rLo, rHi, pLo, pHi)
-          // Distinct-path bloom (see PathBloom for why ranges alone cannot
-          // prune path-only lookups). Distinct paths come from the cheapest
-          // sound source available:
-          //  1. the path column's DICTIONARY pages — metadata-sized IO,
-          //     valid at ANY row count, but only when EVERY data page is
-          //     dictionary-encoded (repeat-heavy paths);
-          //  2. else, for files up to a row cap, a scoped single-column
-          //     value read (the countLiveRows pattern) — parquet's writer
-          //     falls back to PLAIN exactly when paths are mostly UNIQUE,
-          //     which is the common compacted-web-corpus shape, and there
-          //     the column read is small and the commit just wrote the
-          //     file anyway.
-          // A big plain-encoded file (> cap) carries no bloom: at 10
-          // bits/key its bloom would outgrow the manifest's size
-          // discipline regardless — conservative, like every absent stat.
-          val pathBloomB64: Option[String] =
-            if (nRows == 0) None
-            else try {
-              val msgSchema = reader.getFooter.getFileMetaData.getSchema
-              if (!msgSchema.containsField("path")) None
-              else {
-                val maxDistinct = PathBloom.MaxBytes * 8 / PathBloom.BitsPerKey
-                val dataBlocks = blocks.filter(_.getRowCount > 0)
-                val chunks = dataBlocks.map(
-                  _.getColumns.asScala.find(_.getPath.toDotString == "path"))
-                val allDict = chunks.nonEmpty && chunks.forall(_.exists { c =>
-                  val es = c.getEncodingStats
-                  es != null && es.hasDictionaryPages && !es.hasNonDictionaryEncodedPages
-                })
-                val distinct: Option[Iterable[Array[Byte]]] =
-                  if (allDict) {
-                    val colDesc = msgSchema.getColumnDescription(Array("path"))
-                    val acc = new scala.collection.mutable.HashSet[String]
-                    var usable = true
-                    dataBlocks.foreach { b =>
-                      if (usable) {
-                        // upcast: the concrete reader class is package-private
-                        val store: org.apache.parquet.column.page.DictionaryPageReadStore =
-                          reader.getDictionaryReader(b)
-                        val page = store.readDictionaryPage(colDesc)
-                        if (page == null) usable = false
-                        else {
-                          val dict = page.getEncoding.initDictionary(colDesc, page)
-                          var i = 0
-                          while (usable && i <= dict.getMaxId) {
-                            acc += dict.decodeToBinary(i).toStringUsingUTF8
-                            if (acc.size > maxDistinct) usable = false
-                            i += 1
-                          }
-                        }
-                      }
-                    }
-                    if (usable) Some(acc.toSeq.map(_.getBytes(StandardCharsets.UTF_8)))
-                    else None
-                  } else if (nRows <= PathBloom.ValueScanRowCap) {
-                    readDistinctPaths(new Path(s"$rootPath/${e.relPath}"), conf,
-                      msgSchema, maxDistinct)
-                  } else None
-                distinct.flatMap(PathBloom.build).map(PathBloom.encode)
-              }
-            } catch { case scala.util.control.NonFatal(_) => None }
-          def withKeys(fe: FileEntry): FileEntry = {
-            val withRange = keyRange match {
-              case Some((rLo, rHi, pLo, pHi)) =>
-                fe.copy(minRepo = rLo, maxRepo = rHi, minPath = pLo, maxPath = pHi)
-              case None => fe
-            }
-            pathBloomB64.fold(withRange)(b => withRange.copy(pathBloom = b))
-          }
-          // live-row count from the tombstone flag's boolean row-group
-          // statistics: an all-false row group is wholly live, an
-          // all-true one wholly tombstone — both free; a MIXED row
-          // group forces one single-column read of the file (rare: most
-          // merges write few tombstones, so most row groups decide on
-          // stats alone)
-          var live = 0L; var liveKnown = true
-          // byte extents of row groups the stats can't decide — only
-          // those are read back (midpoint-range selection)
-          var undecided = List.empty[(Long, Long)]
-          blocks.foreach { b =>
-            b.getColumns.asScala.find(_.getPath.toDotString == LakeTable.DeletedCol) match {
-              case Some(c) =>
-                val st = c.getStatistics
-                def mixed(): Unit =
-                  undecided ::= (b.getStartingPos, b.getCompressedSize)
-                // a NULL tombstone flag reads as not-live (read()'s
-                // `!_deleted` drops it), so stats are trusted only for
-                // null-free row groups
-                if (st == null || st.isEmpty || !st.hasNonNullValue ||
-                    !st.isNumNullsSet || st.getNumNulls > 0L) mixed()
-                else (st.genericGetMin, st.genericGetMax) match {
-                  case (lo: java.lang.Boolean, hi: java.lang.Boolean) =>
-                    if (!lo.booleanValue() && !hi.booleanValue()) live += b.getRowCount
-                    else if (lo.booleanValue() && hi.booleanValue()) () // all tombstones
-                    else mixed()
-                  case _ => mixed()
-                }
-              case None => liveKnown = false
-            }
-          }
-          val nLive =
-            if (nRows == 0) 0L
-            else if (!liveKnown) -1L
-            else if (undecided.nonEmpty) {
-              val partial = countLiveRows(new Path(s"$rootPath/${e.relPath}"),
-                conf, reader.getFooter.getFileMetaData.getSchema, undecided)
-              if (partial < 0L) -1L else live + partial
-            } else live
-          if (nRows == 0)
-            e.copy(minLsn = Long.MaxValue, maxLsn = Long.MinValue, nKeys = 0, nLive = 0)
-          else if (ok) withKeys(e.copy(minLsn = mn, maxLsn = mx, nKeys = nRows, nLive = nLive))
-          else withKeys(e.copy(nLive = nLive))
-        } finally reader.close()
-      } catch { case scala.util.control.NonFatal(_) => e }
-    }.collect(java.util.stream.Collectors.toList[FileEntry]).asScala.toSeq
+  /** Write `df` — the table's columns plus the bucket column `b` — into
+    * `data/<dirName>` as zstd parquet, one `b=<bucket>` directory per
+    * bucket. Returns the per-file manifest stats the write tasks gathered
+    * (see [[FileStatsTracker]]), for [[listDataFilesWithStats]]. */
+  def writeData(df: DataFrame, dirName: String): Map[String, FileEntry] = {
+    val tracker = new FileStatsTracker(StructType(df.schema.fields.filterNot(_.name == "b")))
+    org.apache.spark.sql.graftx.Bridge.writeParquet(df, s"$root/data/$dirName", "b", tracker)
+    tracker.result
   }
 
-  /** Exact count of `_deleted = false` rows in the given row-group byte
-    * extents, via a single-column read scoped to EXACTLY those row
-    * groups (midpoint-range selection — Spark's own parquet split rule):
-    * the stats-decided groups of the same file are never re-read. NULL
-    * flags count as not-live, matching `read()`'s `!_deleted` filter.
-    * -1 on any failure (readers fall back to a data scan). */
-  private def countLiveRows(p: Path, conf: org.apache.hadoop.conf.Configuration,
-                            schema: org.apache.parquet.schema.MessageType,
-                            extents: Seq[(Long, Long)]): Long = {
-    try {
-      if (!schema.containsField(LakeTable.DeletedCol)) return -1L
-      val proj = new org.apache.parquet.schema.MessageType("graft_live",
-        schema.getType(schema.getFieldIndex(LakeTable.DeletedCol)))
-      val c = new org.apache.hadoop.conf.Configuration(conf) // parallelStream: never mutate shared conf
-      c.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA, proj.toString)
-      extents.foldLeft(0L) { case (acc, (start, len)) =>
-        val reader = org.apache.parquet.hadoop.ParquetReader
-          .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), p)
-          .withConf(c).withFileRange(start, start + math.max(len, 1L)).build()
-        try {
-          var n = acc
-          var g = reader.read()
-          while (g != null) {
-            if (g.getFieldRepetitionCount(0) > 0 && !g.getBoolean(0, 0)) n += 1L
-            g = reader.read()
-          }
-          n
-        } finally reader.close()
-      }
-    } catch { case scala.util.control.NonFatal(_) => -1L }
-  }
-
-  /** Distinct values of the `path` column via a scoped single-column read
-    * (the countLiveRows pattern). None past the distinct cap or on any
-    * failure — callers then record no bloom, conservative. */
-  private def readDistinctPaths(p: Path, conf: org.apache.hadoop.conf.Configuration,
-                                schema: org.apache.parquet.schema.MessageType,
-                                maxDistinct: Int): Option[Iterable[Array[Byte]]] = {
-    try {
-      if (!schema.containsField("path")) return None
-      val proj = new org.apache.parquet.schema.MessageType("graft_paths",
-        schema.getType(schema.getFieldIndex("path")))
-      val c = new org.apache.hadoop.conf.Configuration(conf) // parallelStream: never mutate shared conf
-      c.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA, proj.toString)
-      val reader = org.apache.parquet.hadoop.ParquetReader
-        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), p)
-        .withConf(c).build()
-      try {
-        val acc = new scala.collection.mutable.HashSet[String]
-        var g = reader.read()
-        while (g != null) {
-          if (g.getFieldRepetitionCount(0) > 0) {
-            acc += g.getBinary(0, 0).toStringUsingUTF8
-            if (acc.size > maxDistinct) return None
-          }
-          g = reader.read()
-        }
-        Some(acc.toSeq.map(_.getBytes(StandardCharsets.UTF_8)))
-      } finally reader.close()
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
+  /** `listDataFiles` with the stats [[writeData]] returned for the same
+    * directory attached: no file is opened. This is how the commit path
+    * records the stats readers later prune by (reference: footer
+    * statistics extraction, src/places/place_index.rs:107-145). A file the
+    * write did not report keeps the conservative no-stats sentinel. */
+  def listDataFilesWithStats(dirName: String, stats: Map[String, FileEntry]): Seq[FileEntry] =
+    listDataFiles(dirName).map { e =>
+      stats.get(FileStatsTracker.fileKey(e.relPath)).fold(e)(
+        _.copy(bucket = e.bucket, relPath = e.relPath, nBytes = e.nBytes))
+    }
 
   /** Data directory names currently present under `data/`. */
   def dataDirNames(): Seq[String] = {
@@ -890,7 +652,17 @@ final class LakeTable(
     if (f.exists(versionDir) && f.listStatus(versionDir).isEmpty) f.delete(versionDir, false): Unit
   }
 
-  private def absolute(e: FileEntry): String = s"$root/${e.relPath}"
+  /** The entries as a parquet relation planned from the manifest: paths and
+    * lengths come from the entries, so no listing job runs. Legacy entries
+    * without a recorded length are stat'ed. */
+  private def parquetFiles(schema: StructType, entries: Seq[FileEntry]): DataFrame = {
+    val f = fs
+    val base = f.makeQualified(new Path(root))
+    org.apache.spark.sql.graftx.Bridge.parquetFiles(spark, schema, entries.map { e =>
+      val p = new Path(base, e.relPath)
+      (p, if (e.nBytes >= 0L) e.nBytes else f.getFileStatus(p).getLen)
+    })
+  }
 
   /** Raw state rows (including tombstones) of the given files. Old files
     * lacking newly-evolved columns are read with the snapshot schema so the
@@ -908,13 +680,13 @@ final class LakeTable(
     if (entries.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     else {
       val aliasMap = graft.schema.FieldIds.aliasMap(schema)
-      if (aliasMap.isEmpty) spark.read.schema(schema).parquet(entries.map(absolute): _*)
+      if (aliasMap.isEmpty) parquetFiles(schema, entries)
       else {
         import org.apache.spark.sql.functions.{coalesce, col}
         val expanded = StructType(schema.fields.flatMap(f =>
           f +: aliasMap.getOrElse(f.name, Nil)
             .map(a => StructField(a, f.dataType, nullable = true))))
-        spark.read.schema(expanded).parquet(entries.map(absolute): _*)
+        parquetFiles(expanded, entries)
           .select(schema.fields.toIndexedSeq.map { f =>
             aliasMap.get(f.name) match {
               case None => col(f.name)

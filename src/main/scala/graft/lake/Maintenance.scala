@@ -99,15 +99,13 @@ object Maintenance {
         // separate files), sized by the global sort sample ≈ targetFileBytes
         src.repartitionByRange(math.min(nSplits, Int.MaxValue.toLong).toInt,
           col("b"), col("repo"), col("path"))
-    arranged
-      .sortWithinPartitions(col("b"), col("repo"), col("path"))
-      .write.mode("overwrite").option("compression", "zstd")
-      .partitionBy("b").parquet(s"${table.root}/data/$writeDir")
+    val stats = table.writeData(
+      arranged.sortWithinPartitions(col("b"), col("repo"), col("path")), writeDir)
 
     // rows keep their lsns — the rewrite cannot move the high-water mark,
-    // and the recorded footer stats let later incremental reads skip the
+    // and the recorded file stats let later incremental reads skip the
     // compacted files entirely (nothing in them exceeds the old mark)
-    val newFiles = table.listDataFilesWithStats(writeDir)
+    val newFiles = table.listDataFilesWithStats(writeDir, stats)
     beforeCommit()
     // Commit with REBASE under concurrent writers: a table ingesting
     // continuously would otherwise starve compaction forever — the
@@ -192,15 +190,13 @@ object Maintenance {
       throw new IllegalStateException("cannot rebucket an empty table"))
     val newVersion = snap.version + 1
     val writeDir = s"v$newVersion-${java.util.UUID.randomUUID().toString.take(8)}"
-    table.readFiles(snap.schema, snap.allFiles)
+    val stats = table.writeData(table.readFiles(snap.schema, snap.allFiles)
       .withColumn("b", pmod(xxhash64(col("repo")), lit(newNumBuckets)).cast("int"))
       .repartition(newNumBuckets, col("b"))
       // key-sorted rewrite: keeps footer (repo, path) min/max tight per
       // row group so point-lookup pruning survives the layout change
-      .sortWithinPartitions(col("b"), col("repo"), col("path"))
-      .write.mode("overwrite").option("compression", "zstd")
-      .partitionBy("b").parquet(s"${table.root}/data/$writeDir")
-    val newFiles = table.listDataFilesWithStats(writeDir)
+      .sortWithinPartitions(col("b"), col("repo"), col("path")), writeDir)
+    val newFiles = table.listDataFilesWithStats(writeDir, stats)
     table.commitSnapshot(snap.copy(
       version = newVersion,
       numBuckets = newNumBuckets,

@@ -12,15 +12,9 @@ import graft.functions.Hashing
   * path (k=6, fpp ≈ 1.6%), a path-only point lookup plans ~fpp of the
   * table's files instead of all of them.
   *
-  * Where the distinct paths come from: the parquet DICTIONARY pages of
-  * the `path` column. When every data page of the column is
-  * dictionary-encoded (checked via the footer's EncodingStats), the
-  * dictionaries enumerate exactly the file's distinct paths — a
-  * metadata-sized read, no row decode, gathered in the same pass that
-  * already reads the footer for lsn/key-range stats. A file whose path
-  * column fell back to plain encoding (pathological cardinality) simply
-  * carries no bloom and stays unprunable — conservative, like every
-  * other absent stat in the manifest.
+  * Where the distinct paths come from: the write tasks collect each
+  * file's distinct paths as they write its rows ([[FileStatsTracker]]),
+  * so no file is re-read for them.
   *
   * Size discipline: the bitset is the next power of two above
   * 10·distinct bits, capped at [[MaxBytes]] per file. Past the cap the
@@ -37,12 +31,6 @@ object PathBloom {
   /** Probes per key (optimal for ~10 bits/key is ln2·10 ≈ 7; 6 keeps the
     * probe loop cheap at fpp ≈ 1.6%). */
   val K = 6
-
-  /** Row cap for the value-scan fallback (plain-encoded path column): a
-    * file above this would usually blow the distinct cap anyway, and the
-    * single-column read at commit should stay a small fraction of the
-    * write the commit just performed. */
-  val ValueScanRowCap = 262144L
 
   private val Seed1 = 0x9e3779b97f4a7c15L
   private val Seed2 = 0xc2b2ae3d27d4eb4fL

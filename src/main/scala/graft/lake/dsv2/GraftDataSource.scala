@@ -24,7 +24,7 @@ import java.util.{Map => JMap, Set => JSet}
   *     engine's bucket pruning, reference row-group pruning
   *     src/places/place_index.rs:217-221);
   *   - `lsn > x` / `lsn >= x` → files whose manifest max_lsn can't
-  *     qualify are skipped (the per-file footer stats recorded at
+  *     qualify are skipped (the per-file lsn stats recorded at
   *     commit; the incremental-read path of Maintenance.changesBetween
   *     exposed to SQL).
   * All filters are also kept as residuals — Spark re-evaluates them on

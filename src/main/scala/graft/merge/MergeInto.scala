@@ -33,8 +33,21 @@ import org.apache.spark.sql.types._
   *     handled by salting the write repartition with
   *     `pmod(xxhash64(path), saltBuckets)` so a hot bucket fans out over
   *     many tasks/files, plus AQE skew splitting.
+  *   - The reduce stage runs one task per (bucket, salt) group, capped at
+  *     `max(spark.sql.shuffle.partitions, input bytes / advisory
+  *     partition size)`: a small epoch runs no more tasks than the
+  *     session's shuffle parallelism, a large one still gets a task per
+  *     ~advisory size of input. Past the cap a task holds several groups
+  *     and writes one file per bucket among them. The cap keeps a small
+  *     epoch cheap: touched × salt groups hash unevenly onto as many
+  *     partitions, leaving about a third of the tasks empty, and every
+  *     task costs its deserialisation.
   *   - Untouched buckets are never read or rewritten, so steady-state cost
   *     tracks change volume, not table size.
+  *   - The target is planned from the manifest (paths and lengths, no
+  *     listing job), and the manifest stats of every written file come
+  *     from the write tasks themselves ([[graft.lake.FileStatsTracker]]):
+  *     the commit opens none of the files it just wrote.
   */
 final case class MergeStats(
     epochId: Long,
@@ -57,23 +70,18 @@ final case class MergeStats(
     keysWritten: Long,
     tombstonesWritten: Long,
     bucketsTouched: Int,
-    durationMs: Long
+    durationMs: Long,
+    /** Milliseconds per phase of the epoch: `touched_scan`, `target_plan`,
+      * `merge_write`, `file_stats`, `commit` and `meta` (empty on a ledger
+      * skip). A phase that did not run is absent. */
+    phaseMs: Map[String, Long] = Map.empty
 )
 
 final class MergeInto(
     table: LakeTable,
     numBuckets: Int = 16,
     saltBuckets: Int = 4,
-    recordMeta: Boolean = true,
-    /** Cache the aligned source for the epoch so the touched-bucket scan
-      * and the merge evaluate the source once, not twice. MEASURED SLOWER
-      * on the local JSON WAL bench (8 cores, 8M events: 29.0s cached vs
-      * 18.0s re-parsed; 2 cores: 75.7 vs 55.4): the touched-bucket scan
-      * is column-pruned to `repo` (a cheap skip-parse), while caching
-      * materializes every row. Worth enabling only when the source is
-      * genuinely expensive twice — a remote/decompressing source, or a
-      * multi-consumer epoch. */
-    cacheSource: Boolean = false
+    recordMeta: Boolean = true
 ) {
   import LakeTable.DeletedCol
 
@@ -91,6 +99,20 @@ final class MergeInto(
       if (have(f.name)) col(f.name).cast(f.dataType).as(f.name)
       else lit(null).cast(f.dataType).as(f.name)
     }.toIndexedSeq: _*)
+  }
+
+  /** Width of the merge's reduce stage: one task per (bucket, salt) group,
+    * but no more than the session's shuffle parallelism, unless the
+    * input's estimated size (the planner's, from file lengths) needs more
+    * tasks of the advisory partition size. An input of unknown size
+    * keeps one task per group. */
+  private def reduceTasks(input: DataFrame, touched: Int): Int = {
+    val conf = input.sparkSession.conf
+    val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+    val bySize = input.queryExecution.optimizedPlan.stats.sizeInBytes / advisory + 1
+    bySize.max(conf.get("spark.sql.shuffle.partitions").toInt)
+      .min(touched * saltBuckets).max(1).toInt
   }
 
   private def asLong(m: Map[String, Any], k: String): Long = m.get(k) match {
@@ -137,19 +159,13 @@ final class MergeInto(
     throw new IllegalStateException("unreachable")
   }
 
-  private val debugTimers = sys.env.contains("GRAFT_MERGE_DEBUG")
-  private def timed[T](name: String)(f: => T): T = {
-    if (!debugTimers) f
-    else {
-      val t = System.nanoTime()
-      val r = f
-      println(f"""{"merge_phase":"$name","secs":${(System.nanoTime() - t) / 1e9}%.2f}""")
-      r
-    }
-  }
-
   private def applyNew(events: DataFrame, epochId: Long,
                        snapOpt: Option[Snapshot], t0: Long): MergeStats = {
+    val phases = scala.collection.mutable.Map.empty[String, Long]
+    def phase[T](name: String)(f: => T): T = {
+      val t = System.nanoTime()
+      try f finally phases(name) = phases.getOrElse(name, 0L) + (System.nanoTime() - t) / 1000000
+    }
     // a merge built for the wrong bucket count would prune by bucket ids
     // that mean something else on disk — fail loudly (after a
     // Maintenance.rebucket, construct a new MergeInto with the new count)
@@ -191,253 +207,246 @@ final class MergeInto(
     val badCond = col("lsn").isNull || col("repo").isNull || col("path").isNull || !opOk
     val inObs = Observation(s"merge-in-$epochId")
     val aligned = align(events, evolvedWithOp)
-    val source0 = aligned
+    val source = aligned
       .observe(inObs, count(lit(1)).as("n"),
         approx_count_distinct(col("lsn")).as("n_lsn"),
         min(col("lsn")).as("min_lsn"),
         sum(when(badCond, 1L).otherwise(0L)).as("n_bad"))
       .where(!badCond)
-    val source = if (cacheSource) source0.persist() else source0
 
-    try {
-      // --- bucket pruning -------------------------------------------------
-      // Touched buckets: tiny distinct over the batch (≤ numBuckets values).
-      // Dedup cannot change the bucket set (a dropped duplicate shares its
-      // lsn/repo with a survivor), so this reads the raw source — one cheap
-      // scan-only job, no cache materialization.
-      // FRESH-TABLE fast path: with no snapshot there are no target files
-      // to prune and no rebase that could consult the set, so the scan job
-      // is pure overhead — skipping it saves a backfill epoch (the dominant
-      // cost of replaying a log from zero) one full pass over the source.
-      // The write's dynamic partitioning still creates only the buckets
-      // that exist; stats take the bucket count from the output
-      // observation instead (below).
-      val touched: Set[Int] = snapOpt match {
-        case None => (0 until numBuckets).toSet
-        case Some(_) => timed("touched")(source.select(bucketExpr.as(BucketCol)).distinct()
-          .collect().map(_.getInt(0)).toSet)
-      }
+    // --- bucket pruning -------------------------------------------------
+    // Touched buckets: tiny distinct over the batch (≤ numBuckets values).
+    // Dedup cannot change the bucket set (a dropped duplicate shares its
+    // lsn/repo with a survivor), so this reads the raw source — one cheap
+    // scan-only job, no cache materialization.
+    // FRESH-TABLE fast path: with no snapshot there are no target files
+    // to prune and no rebase that could consult the set, so the scan job
+    // is pure overhead — skipping it saves a backfill epoch (the dominant
+    // cost of replaying a log from zero) one full pass over the source.
+    // The write's dynamic partitioning still creates only the buckets
+    // that exist; stats take the bucket count from the output
+    // observation instead (below).
+    val touched: Set[Int] = snapOpt match {
+      case None => (0 until numBuckets).toSet
+      case Some(_) => phase("touched_scan")(source.select(bucketExpr.as(BucketCol))
+        .distinct().collect().map(_.getInt(0)).toSet)
+    }
 
-      val targetFiles = snapOpt.map(_.filesIn(touched)).getOrElse(Seq.empty)
-      val target = align(
-        table.readFiles(snapOpt.map(_.schema).getOrElse(physicalSchema), targetFiles)
-          .withColumn("op", when(col(DeletedCol), lit("D")).otherwise(lit("U"))),
-        evolvedWithOp)
+    val targetFiles = snapOpt.map(_.filesIn(touched)).getOrElse(Seq.empty)
+    val target = phase("target_plan")(align(
+      table.readFiles(snapOpt.map(_.schema).getOrElse(physicalSchema), targetFiles)
+        .withColumn("op", when(col(DeletedCol), lit("D")).otherwise(lit("U"))),
+      evolvedWithOp))
 
-      // --- merge: per-key argmax by lsn, single exchange --------------------
-      // ONE shuffle serves both the merge and the file layout: we
-      // repartition explicitly on (bucket, salt) — bucket = f(repo),
-      // salt = g(path) — then take the lsn-argmax per key with a window
-      // over (bucket, salt, repo, path). Since the partitioning
-      // expressions are a subset of the window partition spec,
-      // EnsureRequirements recognizes the distribution as satisfied and
-      // plans the window WITHOUT a second exchange; each reducer task
-      // sorts its partition once and writes exactly its own bucket files.
-      // (Partitioning by the two derived columns doesn't change the
-      // argmax: (repo, path) determines both.) The window+sort form beats
-      // `groupBy.agg(max_by(struct(...)))` ~2× here: a struct-valued
-      // aggregation buffer forces the slow aggregate path, while the sort
-      // runs on flat UnsafeRows. The salt dimension keeps a hot repo's
-      // bucket spread over `saltBuckets` tasks/files.
-      val saltExpr = pmod(xxhash64(col("path")), lit(saltBuckets)).cast(IntegerType)
-      val outObs = Observation(s"merge-out-$epochId")
-      // Tie-break equal lsns toward the TARGET copy (an at-least-once
-      // redelivery ties with the identical already-applied row): the
-      // argmax output is unchanged either way, but it makes `_src` below
-      // a precise ordered-delivery detector — a SOURCE row can then only
-      // win at an lsn at or below the previous high-water mark if it is
-      // a genuinely NOVEL late event (redeliveries lose the tie), which
-      // is exactly the case that breaks incremental readers'
-      // `lsn > highWater` pruning (see Snapshot.unorderedCommits).
-      val SrcCol = "_src"
-      val prevHw = snapOpt.flatMap(_.highWaterLsn)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col(BucketCol), col(SaltCol), col("repo"), col("path"))
-        .orderBy(col("lsn").desc, col(SrcCol).asc)
-      // SOURCE on the union's left: the combined Dataset (and therefore
-      // every action on it, including the write command below) binds to
-      // the left operand's SparkSession = the events dataframe's session.
-      // That is load-bearing for the Observations: inside foreachBatch the
-      // batch df lives on the stream's CLONED session, and Spark's
-      // ExecutionListenerBus delivers execution-end events only to the
-      // session that ran the action (sessionUUID filter) — an Observation
-      // registered on the source completes ONLY via an action on the
-      // source's session. With target on the left, the fresh-table path
-      // (no touched-bucket scan) would leave inObs.get blocked forever
-      // under streaming. Union order cannot change the argmax: ties are
-      // broken by column values, and equal (key, lsn, _src) rows are
-      // identical payloads.
-      val result = source.withColumn(SrcCol, lit(true))
-        .unionByName(target.withColumn(SrcCol, lit(false)))
-        .withColumn(BucketCol, bucketExpr)
-        .withColumn(SaltCol, saltExpr)
-        .repartition(math.max(touched.size * saltBuckets, 1), col(BucketCol), col(SaltCol))
-        .withColumn("_rn", row_number().over(w))
-        .where(col("_rn") === 1)
-        .select((col(SrcCol) +: col(BucketCol) +:
-          evolvedState.fields.map(f => col(f.name)).toIndexedSeq) :+
-          (col("op") === lit("D")).as(DeletedCol): _*)
-        .observe(outObs,
-          count(lit(1)).as("keys"),
-          sum(when(col(DeletedCol), 1L).otherwise(0L)).as("tombstones"),
-          sum(when(col(SrcCol) && prevHw.map(col("lsn") <= lit(_)).getOrElse(lit(false)),
-            1L).otherwise(0L)).as("late_wins"),
-          // written-bucket count for stats on the fresh-table path, where
-          // no touched-scan ran (approx ≡ exact at ≤ numBuckets values)
-          approx_count_distinct(col(BucketCol)).as("n_buckets"))
-        .drop(SrcCol)
+    // --- merge: per-key argmax by lsn, single exchange --------------------
+    // ONE shuffle serves both the merge and the file layout: we
+    // repartition explicitly on (bucket, salt) — bucket = f(repo),
+    // salt = g(path) — then take the lsn-argmax per key with a window
+    // over (bucket, salt, repo, path). Since the partitioning
+    // expressions are a subset of the window partition spec,
+    // EnsureRequirements recognizes the distribution as satisfied and
+    // plans the window WITHOUT a second exchange; each reducer task
+    // sorts its partition once and writes exactly its own bucket files.
+    // (Partitioning by the two derived columns doesn't change the
+    // argmax: (repo, path) determines both.) The window+sort form beats
+    // `groupBy.agg(max_by(struct(...)))` ~2× here: a struct-valued
+    // aggregation buffer forces the slow aggregate path, while the sort
+    // runs on flat UnsafeRows. The salt dimension keeps a hot repo's
+    // bucket spread over `saltBuckets` tasks/files.
+    val saltExpr = pmod(xxhash64(col("path")), lit(saltBuckets)).cast(IntegerType)
+    val outObs = Observation(s"merge-out-$epochId")
+    // Tie-break equal lsns toward the TARGET copy (an at-least-once
+    // redelivery ties with the identical already-applied row): the
+    // argmax output is unchanged either way, but it makes `_src` below
+    // a precise ordered-delivery detector — a SOURCE row can then only
+    // win at an lsn at or below the previous high-water mark if it is
+    // a genuinely NOVEL late event (redeliveries lose the tie), which
+    // is exactly the case that breaks incremental readers'
+    // `lsn > highWater` pruning (see Snapshot.unorderedCommits).
+    val SrcCol = "_src"
+    val prevHw = snapOpt.flatMap(_.highWaterLsn)
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col(BucketCol), col(SaltCol), col("repo"), col("path"))
+      .orderBy(col("lsn").desc, col(SrcCol).asc)
+    // SOURCE on the union's left: the combined Dataset (and therefore
+    // every action on it, including the write command below) binds to
+    // the left operand's SparkSession = the events dataframe's session.
+    // That is load-bearing for the Observations: inside foreachBatch the
+    // batch df lives on the stream's CLONED session, and Spark's
+    // ExecutionListenerBus delivers execution-end events only to the
+    // session that ran the action (sessionUUID filter) — an Observation
+    // registered on the source completes ONLY via an action on the
+    // source's session. With target on the left, the fresh-table path
+    // (no touched-bucket scan) would leave inObs.get blocked forever
+    // under streaming. Union order cannot change the argmax: ties are
+    // broken by column values, and equal (key, lsn, _src) rows are
+    // identical payloads.
+    val both = source.withColumn(SrcCol, lit(true))
+      .unionByName(target.withColumn(SrcCol, lit(false)))
+    val result = both
+      .withColumn(BucketCol, bucketExpr)
+      .withColumn(SaltCol, saltExpr)
+      .repartition(reduceTasks(both, touched.size), col(BucketCol), col(SaltCol))
+      .withColumn("_rn", row_number().over(w))
+      .where(col("_rn") === 1)
+      .select((col(SrcCol) +: col(BucketCol) +:
+        evolvedState.fields.map(f => col(f.name)).toIndexedSeq) :+
+        (col("op") === lit("D")).as(DeletedCol): _*)
+      .observe(outObs,
+        count(lit(1)).as("keys"),
+        sum(when(col(DeletedCol), 1L).otherwise(0L)).as("tombstones"),
+        sum(when(col(SrcCol) && prevHw.map(col("lsn") <= lit(_)).getOrElse(lit(false)),
+          1L).otherwise(0L)).as("late_wins"),
+        // written-bucket count for stats on the fresh-table path, where
+        // no touched-scan ran (approx ≡ exact at ≤ numBuckets values)
+        approx_count_distinct(col(BucketCol)).as("n_buckets"))
+      .drop(SrcCol)
 
-      // --- write touched buckets --------------------------------------------
-      // Unique writer-suffixed directory: data files never collide with a
-      // concurrent writer racing toward the same version — the loser's
-      // commitSnapshot rename fails AFTER writing only its own orphan dir
-      // (cleaned by Maintenance.vacuum), never after clobbering committed
-      // data. A crashed write before commit leaves the same harmless orphan.
-      val newVersion = snapOpt.map(_.version + 1).getOrElse(0L)
-      val writeDir = s"v$newVersion-${java.util.UUID.randomUUID().toString.take(8)}"
-      val outDir = s"${table.root}/data/$writeDir"
-      timed("write")(result
-        .write
-        .mode("overwrite")
-        .option("compression", "zstd")
-        .partitionBy(BucketCol)
-        .parquet(outDir))
+    // --- write touched buckets --------------------------------------------
+    // Unique writer-suffixed directory: data files never collide with a
+    // concurrent writer racing toward the same version — the loser's
+    // commitSnapshot rename fails AFTER writing only its own orphan dir
+    // (cleaned by Maintenance.vacuum), never after clobbering committed
+    // data. A crashed write before commit leaves the same harmless orphan.
+    val newVersion = snapOpt.map(_.version + 1).getOrElse(0L)
+    val writeDir = s"v$newVersion-${java.util.UUID.randomUUID().toString.take(8)}"
+    val writeStats = phase("merge_write")(table.writeData(result, writeDir))
 
-      // the write (or, on incremental epochs, the earlier touched scan)
-      // evaluated the observed plan, so the quarantine count is known; the
-      // rows themselves are persisted only AFTER the commit succeeds
-      // (below) — a commit-conflict retry of this epoch would otherwise
-      // re-append the same poison rows every attempt
-      val nQuarantined = asLong(inObs.get, "n_bad")
+    // the write (or, on incremental epochs, the earlier touched scan)
+    // evaluated the observed plan, so the quarantine count is known; the
+    // rows themselves are persisted only AFTER the commit succeeds
+    // (below) — a commit-conflict retry of this epoch would otherwise
+    // re-append the same poison rows every attempt
+    val nQuarantined = asLong(inObs.get, "n_bad")
 
-      // --- commit -----------------------------------------------------------
-      // Per-file (min_lsn, max_lsn, n_rows) come from the parquet footers
-      // (metadata-only IO); the manifest records them so readers prune
-      // sub-bucket, and the snapshot's high-water lsn advances iff every
-      // file has stats (ordered-log delivery makes rows with
-      // lsn <= highWater provably unchanged in later snapshots).
-      val newFiles = timed("list")(table.listDataFilesWithStats(writeDir))
-      val statsOk = newFiles.forall(_.hasStats)
-      // Ordered-log delivery check: a NOVEL source row won its key at an
-      // lsn at or below the previous high-water mark — out-of-global-
-      // order first delivery (e.g. a streaming source splitting one log
-      // batch across micro-batches). Pure redeliveries do NOT trip this
-      // (they lose the argmax tie to the target copy above). The merge
-      // itself is order-independent (lsn argmax), but incremental
-      // readers' `lsn > highWater` fast path is only sound across
-      // ordered commits — so violations are counted cumulatively and
-      // readers compare endpoint counters (see Snapshot scaladoc).
-      val lateWins = asLong(outObs.get, "late_wins") > 0L
-      val srcMinLsn = asLong(inObs.get, "min_lsn")
+    // --- commit -----------------------------------------------------------
+    // Per-file (min_lsn, max_lsn, n_rows) come from the write tasks; the
+    // manifest records them so readers prune sub-bucket, and the
+    // snapshot's high-water lsn advances iff every file has stats
+    // (ordered-log delivery makes rows with lsn <= highWater provably
+    // unchanged in later snapshots).
+    val newFiles = phase("file_stats")(table.listDataFilesWithStats(writeDir, writeStats))
+    val statsOk = newFiles.forall(_.hasStats)
+    // Ordered-log delivery check: a NOVEL source row won its key at an
+    // lsn at or below the previous high-water mark — out-of-global-
+    // order first delivery (e.g. a streaming source splitting one log
+    // batch across micro-batches). Pure redeliveries do NOT trip this
+    // (they lose the argmax tie to the target copy above). The merge
+    // itself is order-independent (lsn argmax), but incremental
+    // readers' `lsn > highWater` fast path is only sound across
+    // ordered commits — so violations are counted cumulatively and
+    // readers compare endpoint counters (see Snapshot scaladoc).
+    val lateWins = asLong(outObs.get, "late_wins") > 0L
+    val srcMinLsn = asLong(inObs.get, "min_lsn")
 
-      // Commit, with METADATA-ONLY rebase on conflict: if the concurrent
-      // winner left our touched buckets' files and the schema untouched,
-      // the data files we already wrote are exactly what a re-merge
-      // against the winner would produce — so rebuild only the snapshot
-      // metadata on its head and retry the rename. Writers on DISJOINT
-      // buckets therefore never recompute (the Iceberg-style rebase);
-      // anything else rethrows to apply()'s full-recompute loop.
-      var base = snapOpt
-      var baseIsOriginal = true
-      var committedVersion = -1L
-      var skippedStats: Option[MergeStats] = None
-      while (committedVersion < 0L && skippedStats.isEmpty) {
-        val commitVersion = base.map(_.version + 1).getOrElse(0L)
-        val newHighWater: Option[Long] = base match {
-          case None =>
-            if (statsOk) Some(newFiles.map(_.maxLsn).foldLeft(Long.MinValue)(math.max))
-            else None
-          case Some(s) => s.highWaterLsn match {
-            case Some(hw) if statsOk =>
-              Some(newFiles.map(_.maxLsn).foldLeft(hw)(math.max))
-            // a catalog-created EMPTY table has no mark yet; the first data
-            // commit initializes it exactly like a fresh table would
-            case None if statsOk && s.allFiles.isEmpty =>
-              Some(newFiles.map(_.maxLsn).foldLeft(Long.MinValue)(math.max))
-            case _ => None
-          }
-        }
-        val filesRef = base
-          .map(s => table.successorFiles(s, touched, newFiles))
-          .getOrElse(InlineFiles(newFiles))
-        val schemaVersion = base.map { s =>
-          if (s.schema == physicalSchema) s.schemaVersion else s.schemaVersion + 1
-        }.getOrElse(1)
-        // against the ORIGINAL base the late-win observation is exact;
-        // after a rebase the mark may have advanced past some of our
-        // lsns, so fall back to the conservative source-min test (a false
-        // positive only costs readers their hw pruning on this range,
-        // never soundness)
-        val unordered =
-          if (baseIsOriginal) lateWins
-          else lateWins || base.flatMap(_.highWaterLsn).exists(srcMinLsn <= _)
-        try {
-          table.commitSnapshot(Snapshot(
-            version = commitVersion,
-            schemaVersion = schemaVersion,
-            schema = physicalSchema,
-            numBuckets = numBuckets,
-            epochs = base.map(_.epochs).getOrElse(Set.empty) + epochId,
-            filesRef = filesRef,
-            highWaterLsn = newHighWater,
-            unorderedCommits = base.map(_.unorderedCommits).getOrElse(0L) +
-              (if (unordered) 1L else 0L)
-          ))
-          committedVersion = commitVersion
-        } catch {
-          case e: graft.lake.CommitConflictException =>
-            val cur = table.currentSnapshot().getOrElse(throw e)
-            if (cur.epochs.contains(epochId)) {
-              // our own epoch landed concurrently (a speculative retry of
-              // one logical writer): degrade to a ledger skip
-              skippedStats = Some(MergeStats(epochId, cur.version, skipped = true,
-                0, 0, 0, 0, 0, 0, (System.nanoTime() - t0) / 1000000))
-            } else {
-              val fastOk = snapOpt.isDefined &&
-                cur.numBuckets == numBuckets &&
-                cur.schema == snapOpt.get.schema &&
-                cur.filesIn(touched).map(_.relPath).toSet ==
-                  targetFiles.map(_.relPath).toSet
-              if (!fastOk) throw e
-              base = Some(cur)
-              baseIsOriginal = false
-            }
-        }
-      }
-      skippedStats match {
-        case Some(sk) => sk
+    // Commit, with METADATA-ONLY rebase on conflict: if the concurrent
+    // winner left our touched buckets' files and the schema untouched,
+    // the data files we already wrote are exactly what a re-merge
+    // against the winner would produce — so rebuild only the snapshot
+    // metadata on its head and retry the rename. Writers on DISJOINT
+    // buckets therefore never recompute (the Iceberg-style rebase);
+    // anything else rethrows to apply()'s full-recompute loop.
+    var base = snapOpt
+    var baseIsOriginal = true
+    var committedVersion = -1L
+    var skippedStats: Option[MergeStats] = None
+    val commitStart = System.nanoTime()
+    while (committedVersion < 0L && skippedStats.isEmpty) {
+      val commitVersion = base.map(_.version + 1).getOrElse(0L)
+      val newHighWater: Option[Long] = base match {
         case None =>
-          // persist quarantined rows exactly once, post-commit (JSONL:
-          // schema-tolerant across evolving event schemas) — replay after
-          // upstream repair is `spark.read.json(...)` → merge.apply. A
-          // crash in the gap loses only the quarantine COPY (the metrics
-          // row below shares that durability class), never state; a
-          // conflict-retried attempt rethrows before reaching here, so
-          // retries cannot duplicate the rows. repartition(1): atomicAppend
-          // renames part files one by one, so a single part makes the
-          // epoch's quarantine all-or-nothing under a mid-loop crash
-          // (quarantine volume is poison rows — small by construction).
-          // repartition, NOT coalesce: `aligned` is uncached by default,
-          // and coalesce(1) would fold its whole source re-parse into one
-          // task; the shuffle barrier keeps the scan+filter parallel.
-          if (nQuarantined > 0 && recordMeta)
-            Meta.atomicAppend(table,
-              aligned.where(badCond).withColumn("_epoch", lit(epochId)).repartition(1),
-              s"${table.root}/meta/quarantine", "json")
-          val stats = MergeStats(epochId, committedVersion, skipped = false,
-            eventsIn = asLong(inObs.get, "n"),
-            eventsQuarantined = nQuarantined,
-            approxDistinctLsn = asLong(inObs.get, "n_lsn"),
-            keysWritten = asLong(outObs.get, "keys"),
-            tombstonesWritten = asLong(outObs.get, "tombstones"),
-            bucketsTouched =
-              if (snapOpt.isEmpty) asLong(outObs.get, "n_buckets").toInt else touched.size,
-            durationMs = (System.nanoTime() - t0) / 1000000)
-          if (recordMeta) Meta.record(table, stats, committedVersion, epochId, newFiles)
-          stats
+          if (statsOk) Some(newFiles.map(_.maxLsn).foldLeft(Long.MinValue)(math.max))
+          else None
+        case Some(s) => s.highWaterLsn match {
+          case Some(hw) if statsOk =>
+            Some(newFiles.map(_.maxLsn).foldLeft(hw)(math.max))
+          // a catalog-created EMPTY table has no mark yet; the first data
+          // commit initializes it exactly like a fresh table would
+          case None if statsOk && s.allFiles.isEmpty =>
+            Some(newFiles.map(_.maxLsn).foldLeft(Long.MinValue)(math.max))
+          case _ => None
+        }
       }
-    } finally {
-      if (cacheSource) source.unpersist(blocking = false): Unit
+      val filesRef = base
+        .map(s => table.successorFiles(s, touched, newFiles))
+        .getOrElse(InlineFiles(newFiles))
+      val schemaVersion = base.map { s =>
+        if (s.schema == physicalSchema) s.schemaVersion else s.schemaVersion + 1
+      }.getOrElse(1)
+      // against the ORIGINAL base the late-win observation is exact;
+      // after a rebase the mark may have advanced past some of our
+      // lsns, so fall back to the conservative source-min test (a false
+      // positive only costs readers their hw pruning on this range,
+      // never soundness)
+      val unordered =
+        if (baseIsOriginal) lateWins
+        else lateWins || base.flatMap(_.highWaterLsn).exists(srcMinLsn <= _)
+      try {
+        table.commitSnapshot(Snapshot(
+          version = commitVersion,
+          schemaVersion = schemaVersion,
+          schema = physicalSchema,
+          numBuckets = numBuckets,
+          epochs = base.map(_.epochs).getOrElse(Set.empty) + epochId,
+          filesRef = filesRef,
+          highWaterLsn = newHighWater,
+          unorderedCommits = base.map(_.unorderedCommits).getOrElse(0L) +
+            (if (unordered) 1L else 0L)
+        ))
+        committedVersion = commitVersion
+      } catch {
+        case e: graft.lake.CommitConflictException =>
+          val cur = table.currentSnapshot().getOrElse(throw e)
+          if (cur.epochs.contains(epochId)) {
+            // our own epoch landed concurrently (a speculative retry of
+            // one logical writer): degrade to a ledger skip
+            skippedStats = Some(MergeStats(epochId, cur.version, skipped = true,
+              0, 0, 0, 0, 0, 0, (System.nanoTime() - t0) / 1000000))
+          } else {
+            val fastOk = snapOpt.isDefined &&
+              cur.numBuckets == numBuckets &&
+              cur.schema == snapOpt.get.schema &&
+              cur.filesIn(touched).map(_.relPath).toSet ==
+                targetFiles.map(_.relPath).toSet
+            if (!fastOk) throw e
+            base = Some(cur)
+            baseIsOriginal = false
+          }
+      }
+    }
+    phases("commit") = (System.nanoTime() - commitStart) / 1000000
+    skippedStats match {
+      case Some(sk) => sk
+      case None =>
+        // persist quarantined rows exactly once, post-commit (JSONL:
+        // schema-tolerant across evolving event schemas) — replay after
+        // upstream repair is `spark.read.json(...)` → merge.apply. A
+        // crash in the gap loses only the quarantine COPY (the metrics
+        // row below shares that durability class), never state; a
+        // conflict-retried attempt rethrows before reaching here, so
+        // retries cannot duplicate the rows. repartition(1): atomicAppend
+        // renames part files one by one, so a single part makes the
+        // epoch's quarantine all-or-nothing under a mid-loop crash
+        // (quarantine volume is poison rows — small by construction).
+        // repartition, NOT coalesce: `aligned` is uncached, and
+        // coalesce(1) would fold its whole source re-parse into one task;
+        // the shuffle barrier keeps the scan+filter parallel.
+        if (nQuarantined > 0 && recordMeta) phase("meta") {
+          Meta.atomicAppend(table,
+            aligned.where(badCond).withColumn("_epoch", lit(epochId)).repartition(1),
+            s"${table.root}/meta/quarantine", "json")
+        }
+        val stats = MergeStats(epochId, committedVersion, skipped = false,
+          eventsIn = asLong(inObs.get, "n"),
+          eventsQuarantined = nQuarantined,
+          approxDistinctLsn = asLong(inObs.get, "n_lsn"),
+          keysWritten = asLong(outObs.get, "keys"),
+          tombstonesWritten = asLong(outObs.get, "tombstones"),
+          bucketsTouched =
+            if (snapOpt.isEmpty) asLong(outObs.get, "n_buckets").toInt else touched.size,
+          durationMs = (System.nanoTime() - t0) / 1000000)
+        if (recordMeta) phase("meta")(Meta.record(table, stats, committedVersion, epochId, newFiles))
+        stats.copy(phaseMs = phases.toMap)
     }
   }
 }
@@ -484,7 +493,7 @@ object Meta {
     val spark = table.spark
     import spark.implicits._
     // lineage: per bucket written this version → key count + lsn range,
-    // rolled up driver-side from the per-file footer stats the commit
+    // rolled up driver-side from the per-file stats the commit
     // already collected — no extra Spark job re-reading written data.
     // An empty micro-batch commits a version with no data files (the
     // epoch must still be ledgered for exactly-once) — nothing to line.

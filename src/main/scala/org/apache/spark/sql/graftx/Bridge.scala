@@ -122,6 +122,61 @@ object Bridge {
     new org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader(
       null, "CORRECTED", "UTC", "CORRECTED", "UTC", false, capacity)
 
+  /** Parquet relation over an explicit file list: `(fully-qualified path,
+    * length)` pairs, read with `schema`. What `spark.read.schema(schema)
+    * .parquet(paths: _*)` plans, minus the discovery: above
+    * `parallelPartitionDiscovery.threshold` paths that call starts a Spark
+    * job just to stat files whose lengths the caller already holds. */
+  def parquetFiles(spark: org.apache.spark.sql.SparkSession,
+                   schema: org.apache.spark.sql.types.StructType,
+                   files: Seq[(org.apache.hadoop.fs.Path, Long)])
+      : org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.execution.datasources._
+    val statuses = files.map { case (p, len) =>
+      FileStatusWithMetadata(new org.apache.hadoop.fs.FileStatus(len, false, 0, 0L, 0L, p))
+    }
+    val index = new FileIndex {
+      override def rootPaths: Seq[org.apache.hadoop.fs.Path] = files.map(_._1)
+      override def listFiles(partitionFilters: Seq[Expression],
+                             dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+        Seq(PartitionDirectory(org.apache.spark.sql.catalyst.InternalRow.empty, statuses))
+      override def inputFiles: Array[String] = files.map(_._1.toString).toArray
+      override def refresh(): Unit = ()
+      override val sizeInBytes: Long = files.map(_._2).sum
+      override def partitionSchema: org.apache.spark.sql.types.StructType =
+        new org.apache.spark.sql.types.StructType()
+    }
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    // asNullable: as DataSource.resolveRelation does for every file read
+    session.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      schema.asNullable, None, new parquet.ParquetFileFormat, Map.empty)(session))
+  }
+
+  /** `df.write.partitionBy(partitionCol).option("compression", "zstd")
+    * .parquet(outDir)`, with `tracker` added to the write tasks' stats
+    * trackers (DataFrameWriter has no hook for that). Runs the same
+    * FileFormatWriter job under a SQL execution of `df`'s own query, so
+    * Observations on `df` complete on `df`'s session as with any action. */
+  def writeParquet(df: org.apache.spark.sql.DataFrame, outDir: String, partitionCol: String,
+                   tracker: org.apache.spark.sql.execution.datasources.WriteJobStatsTracker)
+      : Unit = {
+    import org.apache.spark.sql.execution.datasources.FileFormatWriter
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
+    val session = ds.sparkSession
+    val qe = ds.queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("save")) {
+      val plan = qe.executedPlan
+      val committer = org.apache.spark.internal.io.FileCommitProtocol.instantiate(
+        session.sessionState.conf.fileCommitProtocolClass,
+        jobId = java.util.UUID.randomUUID().toString, outputPath = outDir)
+      FileFormatWriter.write(session, plan,
+        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat, committer,
+        FileFormatWriter.OutputSpec(outDir, Map.empty, plan.output),
+        session.sessionState.newHadoopConf(), plan.output.filter(_.name == partitionCol),
+        None, Seq(tracker), Map("compression" -> "zstd")): Unit
+    }
+  }
+
   /** Register a function builder on a live session's function registry
     * (the post-build counterpart of SparkSessionExtensions.injectFunction,
     * for sessions we don't construct — e.g. the driver's). */
