@@ -200,6 +200,11 @@ class GraftCatalog extends CatalogPlugin with ProcedureCatalog with TableCatalog
     import graft.schema.FieldIds
     val path = pathOf(ident)
     val t = new LakeTable(spark, path)
+    // names are reserved the way Spark resolves them: `foo` and `FOO` are
+    // one column to a case-insensitive session
+    val norm: String => String =
+      if (org.apache.spark.sql.internal.SQLConf.get.caseSensitiveAnalysis) identity
+      else _.toLowerCase(java.util.Locale.ROOT)
     var attempts = 0
     while (true) {
       val snap = t.currentSnapshot().getOrElse(throw new NoSuchTableException(ident))
@@ -224,8 +229,8 @@ class GraftCatalog extends CatalogPlugin with ProcedureCatalog with TableCatalog
           // under one name inside committed files of different eras
           val others = schema.fields.filterNot(_.name == old)
           val taken = (others.flatMap(f => f.name +: FieldIds.aliases(f)) ++
-            GraftCatalog.RenameReserved).toSet
-          require(!taken.contains(nw),
+            GraftCatalog.RenameReserved).map(norm).toSet
+          require(!taken.contains(norm(nw)),
             s"column name $nw is already in use (as a live column, a former " +
               "name, or an engine key)")
           StructType(schema.fields.map(f =>
@@ -241,7 +246,7 @@ class GraftCatalog extends CatalogPlugin with ProcedureCatalog with TableCatalog
             s"new column $name must be nullable (rows committed before the " +
               "ALTER have no value for it)")
           require(add.dataType() != NullType, s"new column $name needs a real type")
-          require(!FieldIds.allNames(current).contains(name),
+          require(!FieldIds.allNames(current).map(norm).contains(norm(name)),
             s"column name $name is already in use (live or as a former name)")
           GraftCatalog.requireReadableType(name, add.dataType())
           StructField(name, add.dataType(), nullable = true)

@@ -57,8 +57,8 @@ class GraftDataSource extends TableProvider
       case Some(t) => return Some(table.snapshotAtTag(t))
       case None => ()
     }
-    Option(options.get("versionAsOf")).orElse(Option(options.get("changesTo"))) match {
-      case Some(v) => Some(table.snapshotAt(v.toLong))
+    ReadOpts.version(options, "versionAsOf").orElse(ReadOpts.version(options, "changesTo")) match {
+      case Some(v) => Some(table.snapshotAt(v))
       case None => table.currentSnapshot()
     }
   }
@@ -86,6 +86,7 @@ class GraftDataSource extends TableProvider
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: JMap[String, String]): Table = {
     val options = new CaseInsensitiveStringMap(properties)
+    ReadOpts.validate(options) // refuse a bad option at load(), not mid-query
     if (uninitializedSinkTarget(options))
       return new GraftUninitializedTable(rootOf(options))
     new GraftTable(rootOf(options), snapshotOf(options), schema, options)
@@ -131,6 +132,39 @@ class GraftDataSource extends TableProvider
 private[dsv2] object BranchOpt {
   def of(options: CaseInsensitiveStringMap): String =
     Option(options.get("branch")).getOrElse(graft.lake.LakeTable.MainBranch)
+}
+
+/** The numeric read options, parsed in one place. A value that is not a
+  * number, a negative version, or a bound that is not positive is refused
+  * with an IllegalArgumentException naming the option. */
+private[dsv2] object ReadOpts {
+  private def parse[T](options: CaseInsensitiveStringMap, name: String, what: String)
+                      (conv: String => Option[T], ok: T => Boolean): Option[T] =
+    Option(options.get(name)).map { raw =>
+      conv(raw).filter(ok).getOrElse(throw new IllegalArgumentException(
+        s"$name must be $what, got '$raw'"))
+    }
+
+  def maxSplitBytes(options: CaseInsensitiveStringMap): Long =
+    parse(options, "maxSplitBytes", "positive")(_.toLongOption, (_: Long) > 0L)
+      .getOrElse(GraftSplit.DefaultMaxSplitBytes)
+  def version(options: CaseInsensitiveStringMap, name: String): Option[Long] =
+    parse(options, name, "a non-negative version")(_.toLongOption, (_: Long) >= 0L)
+  def startingVersion(options: CaseInsensitiveStringMap): Option[Long] =
+    version(options, "startingVersion")
+  /** Negative = before the first commit: a full backfill. */
+  def changesFrom(options: CaseInsensitiveStringMap): Option[Long] =
+    parse(options, "changesFrom", "a version")(_.toLongOption, (_: Long) => true)
+  def maxVersionsPerTrigger(options: CaseInsensitiveStringMap): Option[Int] =
+    parse(options, "maxVersionsPerTrigger", "positive")(_.toIntOption, (_: Int) > 0)
+  def maxBytesPerTrigger(options: CaseInsensitiveStringMap): Option[Long] =
+    parse(options, "maxBytesPerTrigger", "positive")(_.toLongOption, (_: Long) > 0L)
+
+  def validate(options: CaseInsensitiveStringMap): Unit = {
+    maxSplitBytes(options); startingVersion(options)
+    maxVersionsPerTrigger(options); maxBytesPerTrigger(options)
+    version(options, "versionAsOf"); version(options, "changesTo"); changesFrom(options)
+  }
 }
 
 /** Placeholder for a streaming-sink target whose table does not exist yet
@@ -289,6 +323,7 @@ final class GraftScanBuilder(root: String, snapshot: graft.lake.Snapshot,
                              options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty())
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates with SupportsPushDownLimit {
+  ReadOpts.validate(options) // catalog reads carry options that getTable never saw
 
   private var required: StructType = visibleSchema
   private var repoEq: Option[String] = None
@@ -431,11 +466,11 @@ final class GraftScanBuilder(root: String, snapshot: graft.lake.Snapshot,
     // only files added in the range, hw-bounded rows; a compaction-only
     // range reads zero data files). Emitted rows are per-key upserts at
     // their lsn; pair with includeTombstones for deletes.
-    val (all, changeBound) = Option(options.get("changesFrom")) match {
+    val (all, changeBound) = ReadOpts.changesFrom(options) match {
       case Some(v) =>
         GraftChanges.entriesAfter(
           new LakeTable(SparkSession.active, root).forBranch(BranchOpt.of(options)),
-          v.toLong, snapshot)
+          v, snapshot)
       case None => (snapshot.allFiles, Long.MinValue)
     }
     val bucketed = repoEq match {
@@ -583,8 +618,7 @@ final class GraftScan(root: String, physicalSchema: StructType, required: Struct
   private var files: Seq[FileEntry] = initialFiles
   private var runtimePruned: Int = 0
   private def includeTombstones = options.getBoolean("includeTombstones", false)
-  private def maxSplitBytes = Option(options.get("maxSplitBytes")).map(_.toLong)
-    .getOrElse(GraftSplit.DefaultMaxSplitBytes)
+  private val maxSplitBytes = ReadOpts.maxSplitBytes(options)
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
@@ -695,10 +729,9 @@ final class GraftScan(root: String, physicalSchema: StructType, required: Struct
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new GraftMicroBatchStream(root, physicalSchema, required,
       includeTombstones = includeTombstones,
-      startingVersion = Option(options.get("startingVersion")).map(_.toLong),
-      maxVersionsPerTrigger = Option(options.get("maxVersionsPerTrigger")).map(_.toInt),
-      maxBytesPerTrigger = Option(options.get("maxBytesPerTrigger")).map(_.toLong),
-      maxSplitBytes = Option(options.get("maxSplitBytes")).map(_.toLong)
-        .getOrElse(GraftSplit.DefaultMaxSplitBytes),
+      startingVersion = ReadOpts.startingVersion(options),
+      maxVersionsPerTrigger = ReadOpts.maxVersionsPerTrigger(options),
+      maxBytesPerTrigger = ReadOpts.maxBytesPerTrigger(options),
+      maxSplitBytes = maxSplitBytes,
       branch = BranchOpt.of(options))
 }

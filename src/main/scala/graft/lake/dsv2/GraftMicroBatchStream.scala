@@ -145,8 +145,29 @@ final class GraftMicroBatchStream(
     val toV = end.asInstanceOf[GraftOffset].version
     if (toV <= fromV) return Array.empty
     val t = table
-    val (entries, bound) = GraftChanges.entriesAfter(t, fromV, t.snapshotAt(toV))
+    val to = t.snapshotAt(toV)
+    requireNoRename(to)
+    val (entries, bound) = GraftChanges.entriesAfter(t, fromV, to)
     GraftSplit.partitions(root, entries, bound, maxSplitBytes)
+  }
+
+  /** The readers resolve each column by the names `physicalSchema` knew
+    * when the stream started (its name and former names). A RENAME
+    * committed since then stores the column under a name they do not
+    * know, so every later row would read it as null: fail the batch
+    * instead. A batch ending before a rename the pinned schema already
+    * knows reads fine, since its files use one of the pinned names. A
+    * restarted stream pins the new schema, whose aliases cover every
+    * earlier era. */
+  private def requireNoRename(to: graft.lake.Snapshot): Unit = {
+    import graft.schema.FieldIds
+    def names(f: org.apache.spark.sql.types.StructField) = (f.name +: FieldIds.aliases(f)).toSet
+    val pinned = physicalSchema.fields.flatMap(f => FieldIds.id(f).map(_ -> f)).toMap
+    for (f <- to.schema.fields; p <- FieldIds.id(f).flatMap(pinned.get)
+         if !names(f).subsetOf(names(p)))
+      throw new IllegalStateException(
+        s"column ${p.name} was renamed to ${f.name} (version ${to.version}) while this " +
+          "stream was running; restart the stream to read it under its current name")
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

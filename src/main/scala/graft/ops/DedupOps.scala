@@ -450,7 +450,7 @@ object DedupOps {
     * pair set — one exchange+sort on gram, where the groupBy+self-join
     * form pays the gram exchange on BOTH join sides plus the merge
     * (same-JVM interleaved A/B with single-eval gram extraction,
-    * tools/Q47Probe at sf0.1: window 1.26-1.56 s vs join 1.97-2.19 s);
+    * the since-deleted tools/Q47Probe at sf0.1: window 1.26-1.56 s vs join 1.97-2.19 s);
     * (3) one per-doc rollup. Gram extraction is the single-eval
     * [[fns.wordShingles]] expression — the composed-builtins form
     * re-evaluated the token split per lambda element and dominated

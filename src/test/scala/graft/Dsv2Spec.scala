@@ -600,6 +600,40 @@ class Dsv2Spec extends AnyFunSuite {
     assert(e.getMessage.contains("maxSplitBytes must be positive"))
   }
 
+  test("numeric read options are validated when the read is built, naming the option") {
+    val table = build()
+    val bad = Seq("maxSplitBytes" -> "abc", "maxSplitBytes" -> "0",
+      "startingVersion" -> "v1", "startingVersion" -> "-1",
+      "maxVersionsPerTrigger" -> "1.5", "maxVersionsPerTrigger" -> "0",
+      "maxVersionsPerTrigger" -> "9999999999",
+      "maxBytesPerTrigger" -> "", "maxBytesPerTrigger" -> "-4096",
+      "versionAsOf" -> "-1", "changesTo" -> "latest", "changesFrom" -> "1e3")
+    val loads = Seq[(String, (String, String) => Any)](
+      "batch" -> ((o, v) => spark.read.format("graft").option(o, v).load(table.root)),
+      "stream" -> ((o, v) => spark.readStream.format("graft").option(o, v).load(table.root)))
+    for ((opt, v) <- bad; (kind, load) <- loads) {
+      // refused at load(), before any query runs: an IllegalArgumentException
+      // that names the option, not a NumberFormatException from inside a job
+      val e = intercept[IllegalArgumentException](load(opt, v))
+      assert(!e.isInstanceOf[NumberFormatException] && e.getMessage.contains(opt),
+        s"$kind $opt=$v: ${e.getMessage}")
+    }
+    // the catalog path carries read options that load() never parses
+    val wh = TestSpark.tmpDir("dsv2opts")
+    spark.conf.set("spark.sql.catalog.graft_opt", classOf[graft.lake.dsv2.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graft_opt.warehouse", wh)
+    spark.sql("CREATE TABLE graft_opt.db.t (lsn BIGINT, repo STRING, path STRING) " +
+      "TBLPROPERTIES ('buckets'='2')")
+    spark.sql("INSERT INTO graft_opt.db.t VALUES (1, 'r1', 'a')")
+    val viaCatalog = intercept[IllegalArgumentException] {
+      spark.read.option("maxSplitBytes", "12MB").table("graft_opt.db.t").collect()
+    }
+    assert(viaCatalog.getMessage.contains("maxSplitBytes"), viaCatalog.getMessage)
+    // well-formed values still read
+    assert(spark.read.format("graft").option("maxSplitBytes", "4096")
+      .option("startingVersion", "0").load(table.root).count() == table.read().count())
+  }
+
   // ----- columnar (vectorized) read path --------------------------------
 
   /** A ColumnarToRow whose subtree holds the BatchScan (whole-stage codegen
@@ -930,6 +964,37 @@ class Dsv2Spec extends AnyFunSuite {
     assert(spark.sql("SELECT repo, stars FROM graft_rn.db.t ORDER BY repo")
       .collect().map(r => (r.getString(0), r.getInt(1))).toSeq ==
       Seq(("r1", 11), ("r2", 20)))
+  }
+
+  test("RENAME/ADD name reservation follows spark.sql.caseSensitive") {
+    val wh = TestSpark.tmpDir("dsv2case")
+    spark.conf.set("spark.sql.catalog.graft_ci", classOf[graft.lake.dsv2.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graft_ci.warehouse", wh)
+    spark.sql("CREATE TABLE graft_ci.db.t (lsn BIGINT, repo STRING, path STRING, " +
+      "foo INT, x INT) TBLPROPERTIES ('buckets'='2')")
+    val t = new LakeTable(spark, s"$wh/db/t")
+    def refused(ddl: String): String = {
+      val e = intercept[Exception](spark.sql(ddl))
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" | ")
+    }
+    // case-insensitive session (Spark's default): FOO is foo
+    refused("ALTER TABLE graft_ci.db.t RENAME COLUMN x TO FOO") // live name
+    spark.sql("ALTER TABLE graft_ci.db.t RENAME COLUMN foo TO qux") // `foo` is now a former name
+    val v = t.currentSnapshot().get.version
+    Seq("ALTER TABLE graft_ci.db.t RENAME COLUMN x TO FOO",
+      "ALTER TABLE graft_ci.db.t ADD COLUMN Foo INT").foreach { ddl =>
+      val msg = refused(ddl)
+      assert(msg.contains("already in use"), s"$ddl: $msg")
+    }
+    assert(t.currentSnapshot().get.version == v, "a refused ALTER left a commit behind")
+    // a case-sensitive session keeps distinct spellings distinct, as before
+    spark.conf.set("spark.sql.caseSensitive", "true")
+    try spark.sql("ALTER TABLE graft_ci.db.t RENAME COLUMN x TO FOO")
+    finally spark.conf.unset("spark.sql.caseSensitive")
+    val renamed = t.currentSnapshot().get.schema
+    assert(renamed.fieldNames.contains("FOO") && !renamed.fieldNames.contains("x"))
+    assert(graft.schema.FieldIds.aliases(renamed("qux")) == Seq("foo"))
   }
 
   test("SQL-only training pipeline: ingest -> dedup -> sample -> pack via CALL") {
@@ -1456,6 +1521,59 @@ class Dsv2Spec extends AnyFunSuite {
     q.awaitTermination()
     q.stop()
     (spark.read.parquet(out).collect().toSeq, q)
+  }
+
+  test("streaming: a RENAME committed while the stream runs fails the next batch") {
+    val wh = TestSpark.tmpDir("dsv2rnstream")
+    spark.conf.set("spark.sql.catalog.graft_rs", classOf[graft.lake.dsv2.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graft_rs.warehouse", wh)
+    spark.sql("CREATE TABLE graft_rs.db.t (lsn BIGINT, repo STRING, path STRING, " +
+      "stars INT) TBLPROPERTIES ('buckets'='2')")
+    spark.sql("INSERT INTO graft_rs.db.t VALUES (1, 'r1', 'a', 10)")
+    val q = spark.readStream.format("graft").load(s"$wh/db/t").writeStream
+      .format("memory").queryName("graft_rename_stream")
+      .option("checkpointLocation", s"$wh/cp").start()
+    try {
+      q.processAllAvailable()
+      assert(spark.table("graft_rename_stream").select("stars").collect()
+        .map(_.getInt(0)).toSeq == Seq(10))
+      spark.sql("ALTER TABLE graft_rs.db.t RENAME COLUMN stars TO rating")
+      spark.sql("INSERT INTO graft_rs.db.t VALUES (2, 'r1', 'b', 20)")
+      // the pinned readers know only `stars`: the batch over the new file
+      // must fail, not emit (r1, b) with a null rating
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q.processAllAvailable()
+      }
+      val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" | ")
+      assert(msg.contains("column stars was renamed to rating") && msg.contains("restart"), msg)
+      assert(spark.table("graft_rename_stream").count() == 1L, "a batch with nulls was emitted")
+    } finally q.stop()
+  }
+
+  test("streaming: a capped stream started after a RENAME reads the earlier era") {
+    // the stream pins the current schema (`rating`, alias `stars`); its
+    // first capped batch ends at a version from before the rename, whose
+    // files say `stars`: the pinned aliases resolve them, so no batch fails
+    val wh = TestSpark.tmpDir("dsv2rnolder")
+    spark.conf.set("spark.sql.catalog.graft_ro", classOf[graft.lake.dsv2.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graft_ro.warehouse", wh)
+    spark.sql("CREATE TABLE graft_ro.db.t (lsn BIGINT, repo STRING, path STRING, " +
+      "stars INT) TBLPROPERTIES ('buckets'='2')")
+    spark.sql("INSERT INTO graft_ro.db.t VALUES (1, 'r1', 'a', 10)")
+    spark.sql("ALTER TABLE graft_ro.db.t RENAME COLUMN stars TO rating")
+    spark.sql("INSERT INTO graft_ro.db.t VALUES (2, 'r1', 'b', 20)")
+    val q = spark.readStream.format("graft").option("startingVersion", "0")
+      .option("maxVersionsPerTrigger", "1").load(s"$wh/db/t").writeStream
+      .format("memory").queryName("graft_rename_older")
+      .option("checkpointLocation", s"$wh/cp").start()
+    try {
+      q.processAllAvailable()
+      val rows = spark.table("graft_rename_older").select("path", "rating").collect()
+        .map(r => (r.getString(0), if (r.isNullAt(1)) None else Some(r.getInt(1))))
+        .toSet
+      assert(rows == Set(("a", Some(10)), ("b", Some(20))), rows)
+    } finally q.stop()
   }
 
   test("streaming: first run backfills, later runs emit only each commit's changes") {
