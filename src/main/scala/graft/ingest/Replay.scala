@@ -103,7 +103,11 @@ object BatchReplay {
   * `numRowsDroppedByWatermark` counter is recorded in
   * `meta/stream_metrics.late_beyond_watermark` (the observability
   * surface the reference keeps as atomic counters,
-  * src/atp/mod.rs:67-72), and recovery is one idempotent
+  * src/atp/mod.rs:67-72). It is the one per-batch record that cannot
+  * ride in the batch's own snapshot: the counter arrives with the
+  * progress event, after the batch has committed, so it is appended as
+  * one small parquet file per batch (when `recordMeta`), and a crash
+  * between the commit and that append loses the batch's row. Recovery is one idempotent
   * `BatchReplay.replay` of the affected log segment — batch replay has
   * no watermark, applies everything, and the lsn-argmax makes
   * re-application of already-merged events a no-op (spec:
@@ -185,8 +189,8 @@ object StreamingReplay {
           .toDF("batch_id", "generation", "events_in", "late_beyond_watermark",
             "min_ts_sec", "max_ts_sec")
           .coalesce(1)
-        graft.merge.Meta.atomicAppend(table, smDf,
-          s"${table.root}/meta/stream_metrics", "parquet")
+        table.writeMetaFile(smDf, "parquet", "stream_metrics",
+          s"a-${java.util.UUID.randomUUID().toString.take(12)}.parquet")
         landed.add(bid): Unit
       }
     }

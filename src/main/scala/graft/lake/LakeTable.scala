@@ -134,7 +134,15 @@ final case class Snapshot(
       * `lsn > highWaterLsn(v0)` to separate changed rows from carried
       * ones; otherwise they must fall back to join-classification
       * against the old state (see Maintenance.changesBetween). */
-    unorderedCommits: Long = 0L
+    unorderedCommits: Long = 0L,
+    /** What the commit that published this version did. None on
+      * snapshots written before commits recorded it. */
+    summary: Option[CommitSummary] = None,
+    /** Quarantine files (names under `meta/quarantine/`) of every epoch
+      * in the ledger that diverted poison rows. Cumulative like the
+      * ledger: each commit carries its predecessor's list forward, so the
+      * rows stay readable after the version that wrote them expires. */
+    quarantine: Seq[String] = Nil
 ) {
   /** Entries for the given buckets; split listings load only the groups
     * that can contain them. */
@@ -157,8 +165,32 @@ final case class Snapshot(
   }
 }
 
+/** What one commit did, written into the snapshot it publishes — so the
+  * record becomes visible atomically with the data, or not at all.
+  * `operation` is merge, compact, rebucket, rollback, alter or create.
+  * A merge also records its `epoch`, its counters (the `Meta.metrics`
+  * columns: events_in, events_quarantined, approx_distinct_lsn,
+  * keys_written, tombstones_written, buckets_touched, duration_ms), the
+  * milliseconds of each phase before the publish, and the data directory
+  * it wrote (lineage reads that directory's entries back). A snapshot
+  * cannot time its own publish: `duration_ms` and `phaseMs` stop at it. */
+final case class CommitSummary(
+    operation: String,
+    epoch: Option[Long] = None,
+    counters: Map[String, Long] = Map.empty,
+    phaseMs: Map[String, Long] = Map.empty,
+    writeDir: Option[String] = None)
+
 object Snapshot {
   private val Header = "graft-snapshot v1"
+
+  private def serializeLongs(m: Map[String, Long]): String =
+    m.toSeq.sorted.map { case (k, v) => s"$k:$v" }.mkString(",")
+  private def parseLongs(v: String): Map[String, Long] =
+    v.split(',').filter(_.nonEmpty).map { kv =>
+      val i = kv.lastIndexOf(':')
+      kv.substring(0, i) -> kv.substring(i + 1).toLong
+    }.toMap
 
   /** The epoch ledger serializes RUN-LENGTH ENCODED: epochs within one
     * stream generation are `generationBase + batchId` (contiguous by
@@ -212,6 +244,16 @@ object Snapshot {
       sb.append("unorderedCommits=").append(s.unorderedCommits).append('\n')
     sb.append("epochs=").append(serializeEpochs(s.epochs)).append('\n')
     sb.append("schema=").append(s.schema.json).append('\n')
+    // one tab-separated line, "-" for an absent field: operation, epoch,
+    // counters, phase ms, write dir
+    s.summary.foreach { c =>
+      def orDash(v: String) = if (v.isEmpty) "-" else v
+      sb.append("commit=").append(Seq(c.operation, c.epoch.fold("")(_.toString),
+        serializeLongs(c.counters), serializeLongs(c.phaseMs), c.writeDir.getOrElse(""))
+        .map(orDash).mkString("\t")).append('\n')
+    }
+    if (s.quarantine.nonEmpty)
+      sb.append("quarantine=").append(s.quarantine.mkString(",")).append('\n')
     sb.toString
   }
 
@@ -289,12 +331,14 @@ object Snapshot {
     text.split('\n').filter(_.startsWith("file=")).toSeq
       .map(ln => parseFileLine(ln.stripPrefix("file=")))
 
+  /** The `gid<TAB>name` manifest refs of a split root: comma-joined on one
+    * `manifest=` line, or one line each in roots written before that. */
   private[lake] def manifestRefs(text: String): Seq[(Int, String)] =
-    text.split('\n').filter(_.startsWith("manifest=")).toSeq.map { ln =>
-      val v = ln.stripPrefix("manifest=")
-      val t = v.indexOf('\t')
-      (v.substring(0, t).toInt, v.substring(t + 1))
-    }
+    text.split('\n').filter(_.startsWith("manifest=")).toSeq
+      .flatMap(_.stripPrefix("manifest=").split(',').filter(_.nonEmpty)).map { v =>
+        val t = v.indexOf('\t')
+        (v.substring(0, t).toInt, v.substring(t + 1))
+      }
 
   /** Root header + inline file lines (split roots handled by LakeTable,
     * which owns the manifest directory). */
@@ -312,6 +356,8 @@ object Snapshot {
     var epochs = Set.empty[Long]; var schema: StructType = null
     var highWater: Option[Long] = None
     var unordered = 0L
+    var summary: Option[CommitSummary] = None
+    var quarantine = Seq.empty[String]
     lines.drop(1).filter(_.nonEmpty).foreach { ln =>
       val i = ln.indexOf('=')
       val (k, v) = (ln.substring(0, i), ln.substring(i + 1))
@@ -323,11 +369,16 @@ object Snapshot {
         case "unorderedCommits" => unordered = v.toLong
         case "epochs" => if (v.nonEmpty) epochs = parseEpochs(v)
         case "schema" => schema = DataType.fromJson(v).asInstanceOf[StructType]
+        case "commit" =>
+          val f = v.split('\t').map(x => if (x == "-") "" else x)
+          summary = Some(CommitSummary(f(0), Option(f(1)).filter(_.nonEmpty).map(_.toLong),
+            parseLongs(f(2)), parseLongs(f(3)), Option(f(4)).filter(_.nonEmpty)))
+        case "quarantine" => quarantine = v.split(',').toSeq
         case _ => // forward-compatible: ignore unknown keys (file=/manifest= included)
       }
     }
     Snapshot(version, schemaVersion, schema, numBuckets, epochs,
-      InlineFiles(Seq.empty), highWater, unordered)
+      InlineFiles(Seq.empty), highWater, unordered, summary, quarantine)
   }
 
   def deserialize(text: String): Snapshot =
@@ -519,13 +570,15 @@ final class LakeTable(
     }
   }
 
-  /** Atomically publish `snap` as version `snap.version`.
+  /** Atomically publish `snap` as version `snap.version`, recording
+    * `summary` as what this commit did (whatever summary `snap` carried
+    * from a predecessor it was copied from is replaced).
     * Fails if that version already exists (conflict detection). */
-  def commitSnapshot(snap0: Snapshot): Unit = {
+  def commitSnapshot(snap0: Snapshot, summary: CommitSummary): Unit = {
     // single choke point for column-identity assignment: every committed
     // schema carries a stable `graft.id` per field (new fields get the
     // next free id; existing ids are never touched) — see FieldIds
-    val snap = snap0.copy(schema =
+    val snap = snap0.copy(summary = Some(summary), schema =
       graft.schema.FieldIds.assignIds(snap0.schema, skip = Set(LakeTable.DeletedCol)))
     val f = fs
     f.mkdirs(snapshotDir)
@@ -535,11 +588,11 @@ final class LakeTable(
       case InlineFiles(es) => // crossing the threshold: split everything once
         val refs = writeGroupManifests(es.groupBy(_.bucket % manifestGroupCount), f)
         Snapshot.serializeHeader(snap) +
-          refs.map { case (gid, name) => s"manifest=$gid\t$name" }.mkString("", "\n", "\n")
+          refs.map { case (gid, name) => s"$gid\t$name" }.mkString("manifest=", ",", "\n")
       case SplitFiles(carried, updated, _, _) =>
         val refs = (carried ++ writeGroupManifests(updated, f)).sortBy(_._1)
         Snapshot.serializeHeader(snap) +
-          refs.map { case (gid, name) => s"manifest=$gid\t$name" }.mkString("", "\n", "\n")
+          refs.map { case (gid, name) => s"$gid\t$name" }.mkString("manifest=", ",", "\n")
     }
     val dst = new Path(snapshotDir, s"v${snap.version}")
     if (!writeAtomic(f, dst, body))
@@ -597,6 +650,25 @@ final class LakeTable(
     val tracker = new FileStatsTracker(StructType(df.schema.fields.filterNot(_.name == "b")))
     org.apache.spark.sql.graftx.Bridge.writeParquet(df, s"$root/data/$dirName", "b", tracker)
     tracker.result
+  }
+
+  /** Write `df` (one partition) as ONE `format` file named `name` under
+    * `meta/<dir>/`: Spark writes into a dot-prefixed staging directory,
+    * which readers skip, and the single part file is then renamed into
+    * place, so a reader sees the whole file or none of it. A crash strands
+    * only the staging directory; `Maintenance.vacuum` sweeps it once aged. */
+  private[graft] def writeMetaFile(df: DataFrame, format: String, dir: String,
+                                   name: String): Unit = {
+    val f = fs
+    val stage = new Path(root, s"meta/.append-${java.util.UUID.randomUUID().toString.take(12)}")
+    df.write.mode("overwrite").format(format).save(stage.toString)
+    val parts = f.listStatus(stage).map(_.getPath).filter(_.getName.startsWith("part-"))
+    require(parts.length == 1, s"expected one part file in $stage, found ${parts.length}")
+    val dst = new Path(root, s"meta/$dir")
+    f.mkdirs(dst)
+    if (!f.rename(parts.head, new Path(dst, name)))
+      throw new IllegalStateException(s"meta file rename failed into $dst")
+    f.delete(stage, true): Unit
   }
 
   /** `listDataFiles` with the stats [[writeData]] returned for the same

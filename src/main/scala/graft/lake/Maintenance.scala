@@ -26,9 +26,7 @@ object Maintenance {
   import LakeTable.DeletedCol
 
   /** Rewrite buckets having more than `maxFilesPerBucket` files; returns
-    * the number of compacted buckets (0 → no new snapshot committed). Also
-    * compacts the appended meta tables on the same trigger — they accrete
-    * one small file per epoch otherwise.
+    * the number of compacted buckets (0 → no new snapshot committed).
     *
     * Safe under CONCURRENT writers: the commit rebases on conflict —
     * rewrites of buckets untouched by the interleaved commits land
@@ -56,10 +54,9 @@ object Maintenance {
                 * rebase path below. Production callers leave the default. */
               beforeCommit: () => Unit = () => ()): Int = {
     // fail loudly BEFORE any work: a zero byte budget would divide by zero
-    // mid-pass, after compactMeta already committed
+    // mid-pass
     require(maxFilesPerBucket >= 1, s"maxFilesPerBucket must be >= 1, got $maxFilesPerBucket")
     require(targetFileBytes > 0L, s"targetFileBytes must be > 0, got $targetFileBytes")
-    compactMeta(table, maxFilesPerBucket * 4)
     val snap = table.currentSnapshot().getOrElse(return 0)
     // full-table maintenance pass: enumerating every bucket's file count
     // is O(files) by nature (and batched per manifest group)
@@ -131,7 +128,7 @@ object Maintenance {
       try {
         table.commitSnapshot(base.copy(
           version = base.version + 1,
-          filesRef = table.successorFiles(base, buckets, files)))
+          filesRef = table.successorFiles(base, buckets, files)), CommitSummary("compact"))
         return buckets.size
       } catch {
         case e: graft.lake.CommitConflictException =>
@@ -200,7 +197,7 @@ object Maintenance {
     table.commitSnapshot(snap.copy(
       version = newVersion,
       numBuckets = newNumBuckets,
-      filesRef = InlineFiles(newFiles)))
+      filesRef = InlineFiles(newFiles)), CommitSummary("rebucket"))
     newVersion
   }
 
@@ -214,7 +211,9 @@ object Maintenance {
     *     IO regardless of table size);
     *   - restores `toVersion`'s epoch ledger, so the undone epochs are
     *     re-appliable (they are genuinely no longer applied) while a
-    *     crash-retry of a PRE-rollback epoch stays a no-op;
+    *     crash-retry of a PRE-rollback epoch stays a no-op — and with it
+    *     `toVersion`'s quarantine references: the undone epochs' poison
+    *     rows re-quarantine if those epochs are redelivered;
     *   - restores `toVersion`'s high-water mark, and bumps the cumulative
     *     `unorderedCommits` counter past the current head's: rows REVERT
     *     to lsns at or below any spanning range's anchor mark — exactly
@@ -236,7 +235,8 @@ object Maintenance {
     val newVersion = cur.version + 1
     table.commitSnapshot(target.copy(
       version = newVersion,
-      unorderedCommits = math.max(cur.unorderedCommits, target.unorderedCommits) + 1))
+      unorderedCommits = math.max(cur.unorderedCommits, target.unorderedCommits) + 1),
+      CommitSummary("rollback"))
     newVersion
   }
 
@@ -309,236 +309,6 @@ object Maintenance {
       saltBuckets = saltBuckets, recordMeta = false).apply(events, epoch).tableVersion
   }
 
-  private[graft] val metaNames = Seq("lineage", "metrics", "stream_metrics")
-
-  /** Grace window before a finished meta compaction's victim files (and
-    * a crashed one's leftovers) are swept. Within it, in-flight readers
-    * that planned the victims can still read them. */
-  private[graft] val metaCompactGraceMs: Long = 3600L * 1000
-
-  /** Repair / advance `compactMeta`'s marker protocol so every crash
-    * state is readable and no point loses committed rows; returns the
-    * pending state that SURVIVES (readers exclude its victims).
-    *
-    * Marker = `.compact-pending-<name>`: consolidated file name, then
-    * the victim file names. States:
-    *   - marker ∧ consolidated landed ∧ marker older than the grace
-    *     window → finish: delete victims, then the marker. Deletion is
-    *     DEFERRED past the grace window so a reader that planned the
-    *     victims before the landing never has its files deleted
-    *     mid-query; until then readers exclude the victims (their rows
-    *     live in the consolidated file).
-    *   - marker ∧ consolidated landed, still fresh → leave; report it so
-    *     readers exclude the victims.
-    *   - marker ∧ consolidated absent → crash before the landing; the
-    *     victims stay authoritative. The marker is swept only once
-    *     STALE — a fresh one may belong to an in-flight compactor.
-    * Legacy dir-swap states (tmp = `.name.compact`, old = `.name.old`)
-    * from the previous protocol still repair: dir missing ∧ tmp present
-    * → rename tmp into place; dir present → intermediates are stale. */
-  private[graft] def repairMeta(table: LakeTable, name: String)
-      : Option[(String, Seq[String])] = {
-    val hconf = table.spark.sparkContext.hadoopConfiguration
-    val dir = new org.apache.hadoop.fs.Path(s"${table.root}/meta/$name")
-    val fs = dir.getFileSystem(hconf)
-    val tmp = new org.apache.hadoop.fs.Path(s"${table.root}/meta/.$name.compact")
-    val old = new org.apache.hadoop.fs.Path(s"${table.root}/meta/.$name.old")
-    if (!fs.exists(dir) && fs.exists(tmp))
-      require(fs.rename(tmp, dir), s"meta compaction repair failed for $name")
-    if (fs.exists(dir)) { // only then are the legacy intermediates certainly stale
-      if (fs.exists(tmp)) fs.delete(tmp, true): Unit
-      if (fs.exists(old)) fs.delete(old, true): Unit
-    }
-    val cutoff = System.currentTimeMillis() - metaCompactGraceMs
-    pendingCompaction(table, name) match {
-      case Some((marker, consolidated, victims)) =>
-        // a concurrently-deleted marker must not fail the read
-        val mtime = try Some(fs.getFileStatus(marker).getModificationTime)
-          catch { case _: java.io.FileNotFoundException => None }
-        val landed = fs.exists(new org.apache.hadoop.fs.Path(dir, consolidated))
-        mtime match {
-          case None => None // someone else finished the repair
-          case Some(t) if landed && t < cutoff =>
-            // delete the marker ONLY once every victim is verifiably gone:
-            // an fs.delete that returns false without throwing would
-            // otherwise strand a victim .parquet that double-counts in
-            // every future read with no marker left to exclude it. While
-            // any victim survives, keep the marker (the next read retries
-            // the sweep) and keep excluding the victims from THIS read.
-            val allGone = victims.forall { v =>
-              val p = new org.apache.hadoop.fs.Path(dir, v)
-              fs.delete(p, false) || !fs.exists(p)
-            }
-            if (allGone) { fs.delete(marker, false): Unit; None }
-            else Some((consolidated, victims))
-          case Some(_) if landed => Some((consolidated, victims))
-          case Some(t) if t < cutoff => // crashed before landing: stale
-            fs.delete(marker, false)
-            None
-          case _ => None // fresh, not landed: in-flight compactor; victims authoritative
-        }
-      case None => None
-    }
-  }
-
-  /** Parse `.compact-pending-<name>` if present:
-    * (marker path, consolidated file name, victim file names). The
-    * marker is written ATOMICALLY (tmp + rename), so a partial/empty
-    * body is never observable from a live compactor. */
-  private def pendingCompaction(table: LakeTable, name: String)
-      : Option[(org.apache.hadoop.fs.Path, String, Seq[String])] = {
-    val hconf = table.spark.sparkContext.hadoopConfiguration
-    val marker = new org.apache.hadoop.fs.Path(s"${table.root}/meta/.compact-pending-$name")
-    val fs = marker.getFileSystem(hconf)
-    if (!fs.exists(marker)) return None
-    val body = try {
-      val in = fs.open(marker)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    } catch { case _: java.io.FileNotFoundException => return None } // raced a repair
-    val lines = body.split('\n').filter(_.nonEmpty)
-    if (lines.isEmpty) None else Some((marker, lines.head, lines.tail.toSeq))
-  }
-
-  /** The consistent file list of a meta table for readers: repairs crash
-    * states, then excludes a surviving pending compaction's VICTIMS (the
-    * victims' rows already live in its landed consolidated file — reading
-    * both would double-count; the victims stay on disk through the grace
-    * window, so a reader that planned them earlier still reads them). */
-  private[graft] def metaFiles(table: LakeTable, name: String): Seq[String] = {
-    val pending = repairMeta(table, name)
-    val hconf = table.spark.sparkContext.hadoopConfiguration
-    val dir = new org.apache.hadoop.fs.Path(s"${table.root}/meta/$name")
-    val fs = dir.getFileSystem(hconf)
-    if (!fs.exists(dir)) return Seq.empty
-    val names = fs.listStatus(dir).filter(_.isFile).map(_.getPath.getName)
-      .filter(_.endsWith(".parquet")).toSeq
-    // Re-read the intent marker AFTER listing: a compactor that wrote the
-    // marker and landed its consolidated file between repairMeta and
-    // listStatus would otherwise have BOTH the victims and the
-    // consolidated file in `names` with nothing excluding the victims
-    // (transient double-count). The union of the pre-list repair result
-    // and the post-list marker covers both orders: a marker that expired
-    // and was swept between the two reads had its victims excluded (or
-    // already deleted) by repairMeta above.
-    val postList = pendingCompaction(table, name).map { case (_, c, v) => (c, v) }
-    val exclude = (pending.toSeq ++ postList.toSeq).collect {
-      case (consolidated, victims) if names.contains(consolidated) => victims
-    }.flatten.toSet
-    names.filterNot(exclude).map(n => s"${table.root}/meta/$name/$n")
-  }
-
-  /** Compact the per-epoch appended meta tables (lineage / metrics /
-    * stream_metrics) down to one file each once they exceed `maxFiles`
-    * parts — at 10⁵ epochs an uncompacted metrics read degrades linearly
-    * in file count. Single-maintainer operation (like compact itself) —
-    * but safe against concurrent APPENDERS and READERS by construction:
-    * the consolidation covers a snapshot of the current part list (the
-    * victims), lands BESIDE them under a fresh name with an atomic
-    * intent marker, and the victims are deleted only after a grace
-    * window (`repairMeta`), during which readers exclude them via the
-    * marker while readers that planned them earlier still find them on
-    * disk. Appends landing at any point are files the victim list never
-    * names. Every crash state is repaired by `repairMeta`; stranded
-    * staging dirs age out through the sweep below. */
-  def compactMeta(table: LakeTable, maxFiles: Int = 16): Int = {
-    val spark = table.spark
-    val hconf = spark.sparkContext.hadoopConfiguration
-    // sweep append-staging dirs stranded by crashed writers (Meta.
-    // atomicAppend stages in `meta/.append-<uuid>` then renames files
-    // in; the gap is milliseconds, so anything older than an hour is a
-    // crash leftover, never an in-flight append)
-    locally {
-      val metaDir = new org.apache.hadoop.fs.Path(s"${table.root}/meta")
-      val fs = metaDir.getFileSystem(hconf)
-      if (fs.exists(metaDir)) {
-        val cutoff = System.currentTimeMillis() - metaCompactGraceMs
-        // also sweeps `.compact-<uuid>` staging DIRS stranded by crashed
-        // compactors (markers are FILES named `.compact-pending-*` and
-        // are managed by repairMeta, not this sweep)
-        fs.listStatus(metaDir)
-          .filter(s => s.isDirectory &&
-            (s.getPath.getName.startsWith(".append-") ||
-              s.getPath.getName.startsWith(".compact-")) &&
-            s.getModificationTime <= cutoff)
-          .foreach(s => fs.delete(s.getPath, true))
-      }
-    }
-    // Consolidate-into-place, NEVER a directory swap: concurrent merge
-    // epochs keep APPENDING through Meta.atomicAppend while maintenance
-    // runs (the optimistic-concurrency design), and a dir swap would (a)
-    // carry any append landing after the consolidation read into the
-    // deleted old dir — losing the row — and (b) race the appender's
-    // mkdirs between the two renames, failing the swap with the history
-    // only in intermediates. Instead: snapshot the CURRENT part list
-    // (the victims), consolidate exactly those files, record the intent
-    // in a marker, land the consolidated file beside the victims under a
-    // fresh name, then delete the victims. Appends landing at any point
-    // are untouched files the victims list never names. Every crash
-    // state is repaired by `repairMeta`, and readers go through
-    // `metaFiles`, which excludes landed-but-not-yet-deleted victims —
-    // no window double-counts or loses a row. Still single-MAINTAINER
-    // (like compact itself): two concurrent compactors could consolidate
-    // the same victims twice.
-    metaNames.count { name =>
-      val pending = repairMeta(table, name)
-      val dir = new org.apache.hadoop.fs.Path(s"${table.root}/meta/$name")
-      val fs = dir.getFileSystem(hconf)
-      if (pending.isDefined) false // a prior compaction is still in its grace window
-      else {
-        val victims =
-          if (!fs.exists(dir)) Seq.empty[String]
-          else fs.listStatus(dir).filter(_.isFile).map(_.getPath.getName)
-            .filter(_.endsWith(".parquet")).toSeq
-        if (victims.size <= maxFiles) false
-        else {
-          val uuid = java.util.UUID.randomUUID().toString.take(12)
-          val tmp = new org.apache.hadoop.fs.Path(s"${table.root}/meta/.compact-$uuid")
-          // mergeSchema: meta tables gain columns across engine versions
-          // (e.g. metrics' events_quarantined), so parts can hold mixed
-          // footers — the union schema keeps every column
-          spark.read.option("mergeSchema", "true")
-            .parquet(victims.map(v => s"${table.root}/meta/$name/$v"): _*)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(tmp.toString)
-          val part = fs.listStatus(tmp)
-            .find(s => s.isFile && s.getPath.getName.startsWith("part-"))
-            .getOrElse(throw new IllegalStateException(s"no consolidated part for $name"))
-          // marker lands ATOMICALLY (writeAtomic: full write to a dot-tmp,
-          // then link/rename-if-absent): a reader can never observe a
-          // partial/empty marker
-          val consolidated = s"c-$uuid.parquet"
-          val marker = new org.apache.hadoop.fs.Path(s"${table.root}/meta/.compact-pending-$name")
-          val body = (consolidated +: victims).mkString("", "\n", "\n")
-          // shared rename-if-absent publish: a bare rename would silently
-          // REPLACE a concurrent compactor's marker on file: URIs,
-          // orphaning its consolidated file while its victims get swept
-          require(table.writeAtomic(fs, marker, body),
-            s"meta compaction marker failed for $name (concurrent compactor?)")
-          require(fs.rename(part.getPath, new org.apache.hadoop.fs.Path(dir, consolidated)),
-            s"meta compaction landing failed for $name")
-          // victims and marker are NOT deleted here: they age through the
-          // grace window (readers exclude the victims via the marker) and
-          // repairMeta sweeps them after it — so a reader that planned
-          // the victim files before the landing never loses them mid-read
-          fs.delete(tmp, true)
-          true
-        }
-      }
-    }
-  }
-
-  /** Remove orphaned data directories and manifest files — left by
-    * writers that crashed (or lost a commit race) between writing and
-    * committing the snapshot root. An artifact is an orphan iff NO
-    * committed snapshot references it AND it is older than `retentionMs`
-    * (modification-time cutoff, the Iceberg remove-orphan-files rule):
-    * an IN-FLIGHT writer's artifacts are unreferenced by construction
-    * until its commit lands, so an age gate — not reachability alone —
-    * is what keeps vacuum safe to run alongside live writers. Time
-    * travel keeps every referenced version alive regardless of age.
-    * Returns the artifacts removed. Pass `retentionMs = 0` only when no
-    * writer can be active (e.g. tests, single-writer maintenance
-    * windows). */
   /** Stream every file entry referenced by the given (lineage, version)
     * pairs into `f`, loading each DISTINCT content-addressed manifest at
     * most once: versions share most of their groups (a commit rewrites
@@ -562,6 +332,19 @@ object Maintenance {
       }
     }
 
+  /** Remove orphaned data directories, manifest files and quarantine
+    * files — left by writers that crashed (or lost a commit race) between
+    * writing and committing the snapshot root — plus aged `meta/.append-*`
+    * staging directories of crashed meta-file writes. An artifact is an orphan iff NO
+    * committed snapshot references it AND it is older than `retentionMs`
+    * (modification-time cutoff, the Iceberg remove-orphan-files rule):
+    * an IN-FLIGHT writer's artifacts are unreferenced by construction
+    * until its commit lands, so an age gate — not reachability alone —
+    * is what keeps vacuum safe to run alongside live writers. Time
+    * travel keeps every referenced version alive regardless of age.
+    * Returns the artifacts removed. Pass `retentionMs = 0` only when no
+    * writer can be active (e.g. tests, single-writer maintenance
+    * windows). */
   def vacuum(table: LakeTable, retentionMs: Long = 24L * 3600 * 1000): Seq[String] = {
     // reachability spans EVERY lineage at the root (main + branches): a
     // file referenced only by an unpublished audit branch is live.
@@ -572,9 +355,11 @@ object Maintenance {
     val referenced = new scala.collection.mutable.HashSet[String]
     val visited = new scala.collection.mutable.HashSet[String]
     val refManifests = new scala.collection.mutable.HashSet[String]
+    val refQuarantine = new scala.collection.mutable.HashSet[String]
     lineages.foreach { t =>
       t.snapshotVersions().foreach { v =>
         refManifests ++= t.manifestRefsOf(v)
+        refQuarantine ++= t.snapshotAt(v).quarantine
       }
     }
     foreachEntry(
@@ -594,16 +379,20 @@ object Maintenance {
     // clean their own dir, but a driver crash between task commits and
     // batch commit strands it — no snapshot ever references staging, so
     // ordinary reachability would never reclaim it
-    val dmlStale = {
-      val hconf = table.spark.sparkContext.hadoopConfiguration
-      val dml = new org.apache.hadoop.fs.Path(s"${table.root}/_dml")
-      val fs = dml.getFileSystem(hconf)
-      if (!fs.exists(dml)) Seq.empty
-      else fs.listStatus(dml).toSeq
-        .filter(_.getModificationTime <= cutoff)
-        .map { st => fs.delete(st.getPath, true); s"_dml/${st.getPath.getName}" }
+    // and the same sweep for what no snapshot can reference: quarantine
+    // files of attempts that never published, and `meta/.append-*`
+    // staging dirs of crashed meta-file writes
+    def sweep(dir: String)(orphan: String => Boolean): Seq[String] = {
+      val p = new org.apache.hadoop.fs.Path(s"${table.root}/$dir")
+      val fs = p.getFileSystem(table.spark.sparkContext.hadoopConfiguration)
+      if (!fs.exists(p)) Seq.empty
+      else fs.listStatus(p).toSeq
+        .filter(st => orphan(st.getPath.getName) && st.getModificationTime <= cutoff)
+        .map { st => fs.delete(st.getPath, true); s"$dir/${st.getPath.getName}" }
     }
-    orphans ++ orphanManifests ++ dmlStale
+    orphans ++ orphanManifests ++ sweep("_dml")(_ => true) ++
+      sweep("meta/quarantine")(n => !refQuarantine(n)) ++
+      sweep("meta")(_.startsWith(".append-"))
   }
 
   /** Expire old snapshot versions and reclaim the storage only they
@@ -626,6 +415,12 @@ object Maintenance {
     * slowest consumer's lag, as with any retention knob. TAGGED versions
     * (LakeTable.createTag) never expire — a tag is precisely the promise
     * that this version stays readable; drop the tag to release it.
+    * A version's commit summary lives in its snapshot, so it expires
+    * with it (as Delta's DESCRIBE HISTORY follows log retention):
+    * `history` and `Meta.metrics`/`Meta.lineage` then no longer show it.
+    * Quarantine references are carried forward by every later commit,
+    * so the rows stay; a file only expired versions reference (an epoch
+    * a rollback undid) is left for `vacuum`.
     * Returns the removed artifacts. */
   def expireSnapshots(table: LakeTable, keepLast: Int = 2,
                       olderThanMs: Long = 7L * 24 * 3600 * 1000): Seq[String] = {

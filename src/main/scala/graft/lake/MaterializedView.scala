@@ -63,6 +63,9 @@ object MaterializedView {
     * cadence x 10 min instead of cadence x 1 h. */
   private[lake] val SupersededMinRetainMs: Long = 10L * 60 * 1000
 
+  /** Superseded entries older than this are deleted whatever the count. */
+  private val SupersededGraceMs: Long = 3600L * 1000
+
   private def viewRoot(table: LakeTable, name: String) = s"${table.root}/views/$name"
 
   private def fs(table: LakeTable, p: Path) =
@@ -82,7 +85,16 @@ object MaterializedView {
     }
   }
 
-  /** The view's stored rows: groupCols ++ measures ++ `_n_rows`. */
+  /** The view's stored rows: groupCols ++ measures ++ `_n_rows`.
+    *
+    * Reader grace: the returned DataFrame is planned against the data
+    * directory the current pointer names, and a later refresh may delete
+    * that directory once it is superseded. At a streaming refresh cadence
+    * (more than [[SupersededKeepCount]] refreshes inside the hour) a
+    * superseded directory survives only [[SupersededMinRetainMs]], about
+    * 10 minutes, so a scan must finish within ~10 minutes of this call;
+    * at slower cadences it has the full hour. Re-read the view rather
+    * than hold a DataFrame across refreshes. */
   def read(table: LakeTable, name: String): DataFrame = {
     val (_, dir) = currentPointer(table, name).getOrElse(
       throw new IllegalStateException(s"view $name has never been refreshed"))
@@ -147,8 +159,8 @@ object MaterializedView {
     }
     // reclaim what the (single-maintainer) new pointer supersedes: older
     // pointers and every data dir it doesn't name — including leftovers
-    // of crashed earlier refreshes. Superseded entries get the same
-    // reader grace window as meta-compaction victims: a dashboard query
+    // of crashed earlier refreshes. Superseded entries get a reader
+    // grace window (SupersededGraceMs): a dashboard query
     // that resolved the OLD pointer and planned its files must not have
     // them deleted mid-read (streaming refreshes supersede every
     // micro-batch, so an immediate delete races constantly). The grace
@@ -157,7 +169,7 @@ object MaterializedView {
     // within the window only the K newest superseded entries of each
     // kind survive: a reader needs one pointer resolution plus its scan,
     // i.e. a couple of refresh intervals, never the whole hour.
-    val cutoff = System.currentTimeMillis() - Maintenance.metaCompactGraceMs
+    val cutoff = System.currentTimeMillis() - SupersededGraceMs
     val superseded = f.listStatus(new Path(root)).filter { st =>
       val n = st.getPath.getName
       (n.matches("p\\d+") && n.drop(1).toLong < toVersion) ||

@@ -2,12 +2,13 @@ package graft.lake.dsv2
 
 import java.util.{Iterator => JIterator}
 
-import graft.lake.{EnrichedView, InlineFiles, LakeTable, Maintenance, MaterializedView, Snapshot, ViewDef}
+import graft.lake.{CommitSummary, EnrichedView, InlineFiles, LakeTable, Maintenance, MaterializedView, Snapshot, ViewDef}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
 import org.apache.spark.sql.connector.catalog.{CatalogPlugin, Identifier, ProcedureCatalog, Table, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -176,7 +177,7 @@ class GraftCatalog extends CatalogPlugin with ProcedureCatalog with TableCatalog
     // an empty v0: the first INSERT/merge initializes the high-water mark
     new LakeTable(spark, path).commitSnapshot(Snapshot(
       version = 0L, schemaVersion = 1, schema = physical, numBuckets = numBuckets,
-      epochs = Set.empty, filesRef = InlineFiles(Seq.empty)))
+      epochs = Set.empty, filesRef = InlineFiles(Seq.empty)), CommitSummary("create"))
     loadTable(ident)
   }
 
@@ -285,7 +286,8 @@ class GraftCatalog extends CatalogPlugin with ProcedureCatalog with TableCatalog
           epochs = snap.epochs,
           filesRef = t.successorFiles(snap, Set.empty, Seq.empty),
           highWaterLsn = snap.highWaterLsn,
-          unorderedCommits = snap.unorderedCommits))
+          unorderedCommits = snap.unorderedCommits,
+          quarantine = snap.quarantine), CommitSummary("alter"))
         return loadTable(ident)
       } catch {
         // a concurrent writer landed this version: rebase on the fresh
@@ -387,7 +389,8 @@ private final class GraftProcedure(procName: String)
     case "expire_snapshots" =>
       "expire versions beyond keep_last and older_than_ms; reclaim their exclusive storage"
     case "history" =>
-      "one row per retained snapshot: version, commit time, buckets, files, bytes, rows, high-water lsn"
+      "one row per retained snapshot: version, commit time, buckets, files, bytes, rows, " +
+        "high-water lsn, and what the commit did (operation, epoch, merge counters, phase ms)"
     case "rollback" =>
       "publish a new snapshot restoring the state of an earlier version (metadata-only)"
     case "revert" =>
@@ -447,7 +450,7 @@ private final class GraftProcedure(procName: String)
     case "drop_branch" => Array(in("path", StringType), in("name", StringType))
     case "list_branches" => Array(in("path", StringType))
     case "replay_quarantine" => Array(in("path", StringType),
-      inDefault("source", StringType, "''")) // '' = <path>/meta/quarantine
+      inDefault("source", StringType, "''")) // '' = the current snapshot's quarantine files
     case "refresh_enriched_view" => Array(in("path", StringType),
       in("view_path", StringType),
       inDefault("dim_path", StringType, "''"), // '' = no dimension join
@@ -499,22 +502,39 @@ private final class GraftProcedure(procName: String)
       // the DESCRIBE HISTORY surface: one row per RETAINED snapshot,
       // newest first — commit time is the snapshot file's mtime (the
       // rename that publishes it is the only commit point). Stats come
-      // from the manifest (no data files are opened); cost is bounded by
-      // the retention policy, and readers needing only the current
-      // version never pay it.
+      // from the manifest (no data files are opened), and what the commit
+      // did from the summary it wrote into its own snapshot; a summary
+      // expires with its snapshot (Delta's DESCRIBE HISTORY follows log
+      // retention the same way). Columns a commit did not record (a
+      // non-merge operation's counters, any field of a snapshot written
+      // before summaries existed) are null. Cost is bounded by the
+      // retention policy, and readers needing only the current version
+      // never pay it.
       val t = table
+      val counters = Seq("events_in", "events_quarantined", "keys_written", "tombstones_written")
       val schema = StructType(Seq(
         StructField("version", LongType), StructField("committed_at_ms", LongType),
         StructField("num_buckets", IntegerType), StructField("files", IntegerType),
         StructField("bytes", LongType), StructField("rows", LongType),
-        StructField("high_water_lsn", LongType)))
+        StructField("high_water_lsn", LongType), StructField("operation", StringType),
+        StructField("epoch", LongType)) ++ counters.map(StructField(_, LongType)) :+
+        StructField("phase_ms", MapType(StringType, LongType)))
       val rows = t.snapshotVersions().sorted.reverse.map { v =>
         val s = t.snapshotAt(v)
         val fs = s.allFiles
-        new GenericInternalRow(Array[Any](v, t.snapshotMtime(v), s.numBuckets,
+        val c = s.summary
+        val phases = c.map(_.phaseMs).filter(_.nonEmpty).map { m =>
+          val (ks, vs) = m.toSeq.sorted.unzip
+          ArrayBasedMapData(ks.map(UTF8String.fromString).toArray, vs.toArray[Any])
+        }
+        new GenericInternalRow((Seq[Any](v, t.snapshotMtime(v), s.numBuckets,
           fs.size, fs.map(f => math.max(f.nBytes, 0L)).sum,
           fs.map(f => math.max(f.nKeys, 0L)).sum,
-          s.highWaterLsn.map(Long.box).orNull)): InternalRow
+          s.highWaterLsn.map(Long.box).orNull,
+          c.map(x => UTF8String.fromString(x.operation)).orNull,
+          c.flatMap(_.epoch).map(Long.box).orNull) ++
+          counters.map(k => c.flatMap(_.counters.get(k)).map(Long.box).orNull) :+
+          phases.orNull).toArray): InternalRow
       }.toArray
       return java.util.Collections.singletonList[Scan](
         new GraftResultScan(schema, rows)).iterator()
@@ -684,16 +704,21 @@ private final class GraftProcedure(procName: String)
         // forced duplicate replay converges (the lsn argmax is
         // idempotent over identical events). Rows still malformed after
         // "repair" simply re-quarantine. The original quarantine rows
-        // are kept as an audit record.
+        // are kept as an audit record. The default source is the files the
+        // current snapshot references, never a raw listing, which would
+        // also pick up the files of attempts that did not publish.
         val t = table
         val srcOpt = input.getString(1)
-        val src = if (srcOpt == null || srcOpt.isEmpty) s"${t.root}/meta/quarantine" else srcOpt
         val cur = t.currentSnapshot().getOrElse(
           throw new IllegalStateException(s"no snapshot at ${t.root}"))
+        val byDefault = srcOpt == null || srcOpt.isEmpty
+        val src = if (byDefault) s"${t.root}/meta/quarantine" else srcOpt
         val srcPath = new org.apache.hadoop.fs.Path(src)
         val srcFs = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
         val srcFiles =
-          if (!srcFs.exists(srcPath)) Array.empty[org.apache.hadoop.fs.FileStatus]
+          if (byDefault) cur.quarantine.map(n => srcFs.getFileStatus(
+            new org.apache.hadoop.fs.Path(srcPath, n))).toArray
+          else if (!srcFs.exists(srcPath)) Array.empty[org.apache.hadoop.fs.FileStatus]
           else srcFs.listStatus(srcPath).filter(_.isFile)
         if (srcFiles.isEmpty) {
           // nothing ever quarantined (or an empty repair dir): clean no-op
@@ -714,7 +739,8 @@ private final class GraftProcedure(procName: String)
         // as strings): cast each column the TABLE already knows to the
         // table's type; columns the table has never seen pass through
         // untouched and drive ordinary merge-time schema evolution
-        val raw = spark.read.json(src).drop("_epoch")
+        val raw = spark.read.json(
+          (if (byDefault) srcFiles.map(_.getPath.toString).toSeq else Seq(src)): _*).drop("_epoch")
         val events = raw.select(raw.columns.toIndexedSeq.map { c =>
           cur.schema.find(_.name == c) match {
             case Some(f) =>
@@ -725,9 +751,9 @@ private final class GraftProcedure(procName: String)
         val seed = s"replay-quarantine:$src:$finger"
           .getBytes(java.nio.charset.StandardCharsets.UTF_8)
         val epoch = graft.functions.Hashing.hashBytes(seed, 0, seed.length, 0x9A7AL)
-        // recordMeta: still-poison rows must RE-PERSIST to
-        // meta/quarantine under the new epoch (not just count) — the
-        // procedure's contract says they re-quarantine
+        // recordMeta: still-poison rows must RE-PERSIST as the new
+        // epoch's quarantine file (not just count) — the procedure's
+        // contract says they re-quarantine
         val stats = new graft.merge.MergeInto(t, numBuckets = cur.numBuckets,
           saltBuckets = 2, recordMeta = true).apply(events, epoch)
         (StructType(Seq(

@@ -89,7 +89,9 @@ class GraftDataSource extends TableProvider
     ReadOpts.validate(options) // refuse a bad option at load(), not mid-query
     if (uninitializedSinkTarget(options))
       return new GraftUninitializedTable(rootOf(options))
-    new GraftTable(rootOf(options), snapshotOf(options), schema, options)
+    val snap = snapshotOf(options)
+    ReadOpts.checkChangesFrom(options, rootOf(options), snap)
+    new GraftTable(rootOf(options), snap, schema, options)
   }
 
   /** `df.writeStream.format("graft")` — the engine's CDC merge as a first-
@@ -159,6 +161,21 @@ private[dsv2] object ReadOpts {
     parse(options, "maxVersionsPerTrigger", "positive")(_.toIntOption, (_: Int) > 0)
   def maxBytesPerTrigger(options: CaseInsensitiveStringMap): Option[Long] =
     parse(options, "maxBytesPerTrigger", "positive")(_.toLongOption, (_: Long) > 0L)
+
+  /** A `changesFrom` version must be one the read can diff against: at
+    * or below the read's end version, and not expired. */
+  def checkChangesFrom(options: CaseInsensitiveStringMap, root: String,
+                       end: graft.lake.Snapshot): Unit =
+    changesFrom(options).filter(_ >= 0L).foreach { v =>
+      val table = new LakeTable(SparkSession.active, root).forBranch(BranchOpt.of(options))
+      val retained = v <= end.version &&
+        (try { table.snapshotAt(v); true } catch {
+          case _: java.io.FileNotFoundException | _: IllegalArgumentException => false
+        })
+      if (!retained) throw new IllegalArgumentException(
+        s"changesFrom must be a retained version at or below ${end.version} " +
+          s"(the version the read ends at), got '$v'")
+    }
 
   def validate(options: CaseInsensitiveStringMap): Unit = {
     maxSplitBytes(options); startingVersion(options)
@@ -324,6 +341,7 @@ final class GraftScanBuilder(root: String, snapshot: graft.lake.Snapshot,
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates with SupportsPushDownLimit {
   ReadOpts.validate(options) // catalog reads carry options that getTable never saw
+  ReadOpts.checkChangesFrom(options, root, snapshot)
 
   private var required: StructType = visibleSchema
   private var repoEq: Option[String] = None

@@ -1,9 +1,8 @@
 package graft.merge
 
-import graft.lake.{FileEntry, InlineFiles, LakeTable, Snapshot}
-import org.apache.hadoop.fs.Path
+import graft.lake.{CommitSummary, InlineFiles, LakeTable, Snapshot}
 import graft.schema.SchemaRegistry
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -23,7 +22,11 @@ import org.apache.spark.sql.types._
   *   4. `op = D` winners become tombstones, keeping deletes idempotent
   *      under duplicate redelivery across epochs;
   *   5. publish a new snapshot atomically; the epoch ledger makes
-  *      re-delivery of a committed epoch a no-op (exactly-once).
+  *      re-delivery of a committed epoch a no-op (exactly-once). The
+  *      snapshot also carries the epoch's [[CommitSummary]] (counters,
+  *      phase times) and the reference to its quarantined rows, so what
+  *      the epoch did becomes visible with its data and no Spark job runs
+  *      after the data write.
   *
   * Scale notes (100 TB / 1000 executors):
   *   - The only wide exchange is the per-key argmax, a partial-agg-friendly
@@ -58,10 +61,11 @@ final case class MergeStats(
       * path), null lsn, or an op outside {I, U, D}. A CDC engine must not
       * let one poison event abort the stream (a null repo would otherwise
       * land in an unparseable `b=__HIVE_DEFAULT_PARTITION__` directory and
-      * fail the commit); they are counted here, recorded in meta/metrics,
-      * and — when `recordMeta` — persisted to `meta/quarantine` (JSONL,
-      * schema-tolerant across evolving event schemas) for replay after
-      * upstream repair. */
+      * fail the commit); they are counted here and in the commit's
+      * summary, and — when `recordMeta` — written to one JSONL file under
+      * `meta/quarantine/` (schema-tolerant across evolving event schemas)
+      * that the published snapshot references, for replay after upstream
+      * repair ([[Meta.quarantine]]). */
     eventsQuarantined: Long,
     /** HLL estimate (~2% rsd) of distinct lsns in the batch — an
       * observability metric, NOT an exact duplicate-delivery count;
@@ -72,11 +76,15 @@ final case class MergeStats(
     bucketsTouched: Int,
     durationMs: Long,
     /** Milliseconds per phase of the epoch: `touched_scan`, `target_plan`,
-      * `merge_write`, `file_stats`, `commit` and `meta` (empty on a ledger
-      * skip). A phase that did not run is absent. */
+      * `merge_write`, `quarantine` (only when poison rows were written),
+      * `file_stats` and `commit` (empty on a ledger skip). A phase that did
+      * not run is absent. The snapshot's summary holds the same map
+      * without `commit`, which ends after the summary is written. */
     phaseMs: Map[String, Long] = Map.empty
 )
 
+/** `recordMeta` gates only the quarantine FILE (poison rows kept for
+  * replay); the commit summary is always written. */
 final class MergeInto(
     table: LakeTable,
     numBuckets: Int = 16,
@@ -206,12 +214,13 @@ final class MergeInto(
     val opOk = coalesce(col("op").isin("I", "U", "D"), lit(false))
     val badCond = col("lsn").isNull || col("repo").isNull || col("path").isNull || !opOk
     val inObs = Observation(s"merge-in-$epochId")
+    val inMetrics = Seq(count(lit(1)).as("n"),
+      approx_count_distinct(col("lsn")).as("n_lsn"),
+      min(col("lsn")).as("min_lsn"),
+      sum(when(badCond, 1L).otherwise(0L)).as("n_bad"))
     val aligned = align(events, evolvedWithOp)
     val source = aligned
-      .observe(inObs, count(lit(1)).as("n"),
-        approx_count_distinct(col("lsn")).as("n_lsn"),
-        min(col("lsn")).as("min_lsn"),
-        sum(when(badCond, 1L).otherwise(0L)).as("n_bad"))
+      .observe(inObs, inMetrics.head, inMetrics.tail: _*)
       .where(!badCond)
 
     // --- bucket pruning -------------------------------------------------
@@ -313,11 +322,42 @@ final class MergeInto(
     val writeStats = phase("merge_write")(table.writeData(result, writeDir))
 
     // the write (or, on incremental epochs, the earlier touched scan)
-    // evaluated the observed plan, so the quarantine count is known; the
-    // rows themselves are persisted only AFTER the commit succeeds
-    // (below) — a commit-conflict retry of this epoch would otherwise
-    // re-append the same poison rows every attempt
-    val nQuarantined = asLong(inObs.get, "n_bad")
+    // evaluated the observed plan, so every counter is known before the
+    // publish and rides in the snapshot it publishes. The observation
+    // comes back EMPTY when no row of a file source survived the poison
+    // filter (adaptive execution replaces the emptied stage, and its
+    // observed metrics with it): count that all-poison or empty epoch
+    // with a job of its own.
+    val inM = Some(inObs.get).filter(_.nonEmpty).getOrElse {
+      val r = aligned.agg(inMetrics.head, inMetrics.tail: _*).head()
+      r.getValuesMap[Any](r.schema.fieldNames.toSeq)
+    }
+    val nQuarantined = asLong(inM, "n_bad")
+    val stats = MergeStats(epochId, -1L, skipped = false,
+      eventsIn = asLong(inM, "n"),
+      eventsQuarantined = nQuarantined,
+      approxDistinctLsn = asLong(inM, "n_lsn"),
+      keysWritten = asLong(outObs.get, "keys"),
+      tombstonesWritten = asLong(outObs.get, "tombstones"),
+      bucketsTouched =
+        if (snapOpt.isEmpty) asLong(outObs.get, "n_buckets").toInt else touched.size,
+      durationMs = 0L)
+
+    // Quarantined rows are written BEFORE the publish, as one JSONL file
+    // (schema-tolerant across evolving event schemas; replay after
+    // upstream repair is `Meta.quarantine` → merge.apply) that the
+    // snapshot references: they commit with the epoch or not at all. A
+    // lost race or a crash before the publish leaves the file
+    // unreferenced for `Maintenance.vacuum`; a metadata-only rebase below
+    // reuses it, a full recompute writes its own. repartition, NOT
+    // coalesce: `aligned` is uncached, and coalesce(1) would fold its
+    // whole source re-parse into one task.
+    val quarantineFile = if (nQuarantined == 0L || !recordMeta) None else phase("quarantine") {
+      val name = s"e$epochId-${java.util.UUID.randomUUID().toString.take(12)}.json"
+      table.writeMetaFile(aligned.where(badCond).withColumn("_epoch", lit(epochId))
+        .repartition(1), "json", "quarantine", name)
+      Some(name)
+    }
 
     // --- commit -----------------------------------------------------------
     // Per-file (min_lsn, max_lsn, n_rows) come from the write tasks; the
@@ -337,7 +377,7 @@ final class MergeInto(
     // ordered commits — so violations are counted cumulatively and
     // readers compare endpoint counters (see Snapshot scaladoc).
     val lateWins = asLong(outObs.get, "late_wins") > 0L
-    val srcMinLsn = asLong(inObs.get, "min_lsn")
+    val srcMinLsn = asLong(inM, "min_lsn")
 
     // Commit, with METADATA-ONLY rebase on conflict: if the concurrent
     // winner left our touched buckets' files and the schema untouched,
@@ -381,6 +421,7 @@ final class MergeInto(
       val unordered =
         if (baseIsOriginal) lateWins
         else lateWins || base.flatMap(_.highWaterLsn).exists(srcMinLsn <= _)
+      val durationMs = (System.nanoTime() - t0) / 1000000
       try {
         table.commitSnapshot(Snapshot(
           version = commitVersion,
@@ -391,8 +432,16 @@ final class MergeInto(
           filesRef = filesRef,
           highWaterLsn = newHighWater,
           unorderedCommits = base.map(_.unorderedCommits).getOrElse(0L) +
-            (if (unordered) 1L else 0L)
-        ))
+            (if (unordered) 1L else 0L),
+          quarantine = base.map(_.quarantine).getOrElse(Nil) ++ quarantineFile
+        ), CommitSummary("merge", Some(epochId), Map(
+          "events_in" -> stats.eventsIn,
+          "events_quarantined" -> stats.eventsQuarantined,
+          "approx_distinct_lsn" -> stats.approxDistinctLsn,
+          "keys_written" -> stats.keysWritten,
+          "tombstones_written" -> stats.tombstonesWritten,
+          "buckets_touched" -> stats.bucketsTouched.toLong,
+          "duration_ms" -> durationMs), phases.toMap, Some(writeDir)))
         committedVersion = commitVersion
       } catch {
         case e: graft.lake.CommitConflictException =>
@@ -415,122 +464,59 @@ final class MergeInto(
       }
     }
     phases("commit") = (System.nanoTime() - commitStart) / 1000000
-    skippedStats match {
-      case Some(sk) => sk
-      case None =>
-        // persist quarantined rows exactly once, post-commit (JSONL:
-        // schema-tolerant across evolving event schemas) — replay after
-        // upstream repair is `spark.read.json(...)` → merge.apply. A
-        // crash in the gap loses only the quarantine COPY (the metrics
-        // row below shares that durability class), never state; a
-        // conflict-retried attempt rethrows before reaching here, so
-        // retries cannot duplicate the rows. repartition(1): atomicAppend
-        // renames part files one by one, so a single part makes the
-        // epoch's quarantine all-or-nothing under a mid-loop crash
-        // (quarantine volume is poison rows — small by construction).
-        // repartition, NOT coalesce: `aligned` is uncached, and
-        // coalesce(1) would fold its whole source re-parse into one task;
-        // the shuffle barrier keeps the scan+filter parallel.
-        if (nQuarantined > 0 && recordMeta) phase("meta") {
-          Meta.atomicAppend(table,
-            aligned.where(badCond).withColumn("_epoch", lit(epochId)).repartition(1),
-            s"${table.root}/meta/quarantine", "json")
-        }
-        val stats = MergeStats(epochId, committedVersion, skipped = false,
-          eventsIn = asLong(inObs.get, "n"),
-          eventsQuarantined = nQuarantined,
-          approxDistinctLsn = asLong(inObs.get, "n_lsn"),
-          keysWritten = asLong(outObs.get, "keys"),
-          tombstonesWritten = asLong(outObs.get, "tombstones"),
-          bucketsTouched =
-            if (snapOpt.isEmpty) asLong(outObs.get, "n_buckets").toInt else touched.size,
-          durationMs = (System.nanoTime() - t0) / 1000000)
-        if (recordMeta) phase("meta")(Meta.record(table, stats, committedVersion, epochId, newFiles))
-        stats.copy(phaseMs = phases.toMap)
-    }
+    skippedStats.getOrElse(stats.copy(tableVersion = committedVersion,
+      durationMs = (System.nanoTime() - t0) / 1000000, phaseMs = phases.toMap))
   }
 }
 
-/** Per-partition lineage + per-epoch metrics tables — the engine's
-  * observability surface (reference analogue: atomic counters and cache
-  * statistics, src/atp/mod.rs:67-72, src/places/place_index.rs:27-45).
-  * Appended as small parquet tables under the lake root.
+/** Per-epoch metrics, per-bucket lineage and quarantined rows — the
+  * engine's observability surface (reference analogue: atomic counters
+  * and cache statistics, src/atp/mod.rs:67-72,
+  * src/places/place_index.rs:27-45). Each is read back from the
+  * snapshots' own [[CommitSummary]] and quarantine references, so it is
+  * exactly as durable as the commits: one row per RETAINED merge version
+  * of this handle's lineage (a summary expires with its snapshot).
   */
 object Meta {
+  private def merges(table: LakeTable): Seq[(Snapshot, CommitSummary)] =
+    table.snapshotVersions().map(table.snapshotAt).flatMap(s =>
+      s.summary.filter(_.operation == "merge").map(s -> _))
 
-  /** Append `df` to the flat meta directory `destDir` WITHOUT a shared
-    * staging dir: Spark's append mode stages every concurrent job under
-    * the same `<dir>/_temporary/0`, so two epochs committing at once can
-    * delete each other's attempt files mid-write (observed as a chmod/
-    * ENOENT task failure in the quarantine race spec). Instead the job
-    * writes to a writer-unique dot-tmp sibling, then each part file is
-    * RENAMED into the destination under a unique name — renames never
-    * collide, readers never see partial files (dot-prefixed dirs are
-    * invisible to Spark), and a crash in the gap strands only a tmp dir
-    * that the next `compactMeta` sweeps. */
-  private[graft] def atomicAppend(table: LakeTable, df: DataFrame,
-                                  destDir: String, format: String): Unit = {
-    val uuid = java.util.UUID.randomUUID().toString.take(12)
-    val root = new Path(destDir).getParent
-    val tmp = new Path(root, s".append-$uuid")
-    df.write.mode("overwrite").format(format).save(tmp.toString)
-    val fs = tmp.getFileSystem(table.spark.sparkContext.hadoopConfiguration)
-    val dst = new Path(destDir)
-    fs.mkdirs(dst)
-    fs.listStatus(tmp).filter { s =>
-      val n = s.getPath.getName
-      s.isFile && n.startsWith("part-")
-    }.zipWithIndex.foreach { case (s, i) =>
-      val ext = s.getPath.getName.dropWhile(_ != '.')
-      if (!fs.rename(s.getPath, new Path(dst, s"a-$uuid-$i$ext")))
-        throw new IllegalStateException(s"meta append rename failed into $destDir")
-    }
-    fs.delete(tmp, true): Unit
-  }
-
-  def record(table: LakeTable, stats: MergeStats, version: Long, epochId: Long,
-             newFiles: Seq[FileEntry]): Unit = {
+  /** epoch, version, then the merge counters (`buckets_touched` an int). */
+  def metrics(table: LakeTable): DataFrame = {
     val spark = table.spark
     import spark.implicits._
-    // lineage: per bucket written this version → key count + lsn range,
-    // rolled up driver-side from the per-file stats the commit
-    // already collected — no extra Spark job re-reading written data.
-    // An empty micro-batch commits a version with no data files (the
-    // epoch must still be ledgered for exactly-once) — nothing to line.
-    val statted = newFiles.filter(_.hasStats).filter(_.nKeys > 0)
-    if (statted.nonEmpty) {
-      val lineageDf = statted.groupBy(_.bucket).toSeq.sortBy(_._1).map { case (b, fsOf) =>
-        (b, fsOf.map(_.nKeys).sum, fsOf.map(_.minLsn).min, fsOf.map(_.maxLsn).max,
-          version, epochId)
-      }.toDF("bucket", "n_keys", "min_lsn", "max_lsn", "version", "epoch").coalesce(1)
-      atomicAppend(table, lineageDf, s"${table.root}/meta/lineage", "parquet")
-    }
-    val metricsDf = Seq((epochId, version, stats.eventsIn, stats.eventsQuarantined,
-      stats.approxDistinctLsn, stats.keysWritten,
-      stats.tombstonesWritten, stats.bucketsTouched, stats.durationMs))
-      .toDF("epoch", "version", "events_in", "events_quarantined",
-        "approx_distinct_lsn", "keys_written",
-        "tombstones_written", "buckets_touched", "duration_ms")
-      .coalesce(1)
-    atomicAppend(table, metricsDf, s"${table.root}/meta/metrics", "parquet")
+    merges(table).map { case (s, c) =>
+      val n = c.counters.withDefaultValue(0L)
+      (c.epoch.getOrElse(-1L), s.version, n("events_in"), n("events_quarantined"),
+        n("approx_distinct_lsn"), n("keys_written"), n("tombstones_written"),
+        n("buckets_touched").toInt, n("duration_ms"))
+    }.toDF("epoch", "version", "events_in", "events_quarantined", "approx_distinct_lsn",
+      "keys_written", "tombstones_written", "buckets_touched", "duration_ms")
   }
 
-  // mergeSchema on both readers: a table created before a meta column
-  // existed (e.g. metrics' events_quarantined) holds mixed-footer parts,
-  // and a single-footer read would either drop the column or fail on it
-
-  // reads go through Maintenance.metaFiles: it repairs crash states and
-  // serves a CONSISTENT file list while a compaction is mid-flight (a
-  // landed-but-not-swept consolidated file's victims are excluded, so no
-  // window double-counts)
-  private def readMeta(table: LakeTable, name: String): DataFrame = {
-    val files = graft.lake.Maintenance.metaFiles(table, name)
-    if (files.isEmpty) // preserve the missing-table error shape
-      table.spark.read.option("mergeSchema", "true").parquet(s"${table.root}/meta/$name")
-    else table.spark.read.option("mergeSchema", "true").parquet(files: _*)
+  /** Per bucket a merge version wrote: key count and lsn range, rolled up
+    * from the manifest stats of the files in that merge's own data
+    * directory. An empty epoch wrote no data files and has no rows. */
+  def lineage(table: LakeTable): DataFrame = {
+    val spark = table.spark
+    import spark.implicits._
+    merges(table).flatMap { case (s, c) =>
+      val dir = s"data/${c.writeDir.getOrElse("")}/"
+      s.allFiles.filter(f => f.relPath.startsWith(dir) && f.hasStats && f.nKeys > 0)
+        .groupBy(_.bucket).toSeq.sortBy(_._1).map { case (b, fs) =>
+          (b, fs.map(_.nKeys).sum, fs.map(_.minLsn).min, fs.map(_.maxLsn).max,
+            s.version, c.epoch.getOrElse(-1L))
+        }
+    }.toDF("bucket", "n_keys", "min_lsn", "max_lsn", "version", "epoch")
   }
 
-  def lineage(table: LakeTable): DataFrame = readMeta(table, "lineage")
-
-  def metrics(table: LakeTable): DataFrame = readMeta(table, "metrics")
+  /** The quarantined rows of every epoch in the current ledger (JSONL,
+    * the event columns plus `_epoch`); no rows when nothing was. */
+  def quarantine(table: LakeTable): DataFrame = {
+    val files = table.currentSnapshot().map(_.quarantine).getOrElse(Nil)
+    if (files.isEmpty) table.spark.createDataFrame(
+      java.util.Collections.emptyList[Row](), StructType(Seq(StructField("_epoch", LongType))))
+    else table.spark.read.json(files.map(n => s"${table.root}/meta/quarantine/$n"): _*)
+  }
 }

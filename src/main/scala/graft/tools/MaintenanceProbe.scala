@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.lake.{FileEntry, InlineFiles, LakeTable, Maintenance, Snapshot}
+import graft.lake.{CommitSummary, FileEntry, InlineFiles, LakeTable, Maintenance, Snapshot}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Driver-footprint probe for full-table maintenance metadata at HIGH file
@@ -41,7 +41,7 @@ object MaintenanceProbe {
     // v0: one 128 MB file per bucket (the compacted steady state)
     val t0 = System.nanoTime()
     table.commitSnapshot(Snapshot(0L, 0, schema, buckets, Set(0L),
-      InlineFiles((0 until buckets).map(b => entry(b, 0, 0)))))
+      InlineFiles((0 until buckets).map(b => entry(b, 0, 0)))), CommitSummary("merge", Some(0L)))
     // then `commits` incremental epochs, each touching 64 buckets with 2
     // salt files — the streaming-merge shape
     (1 to commits).foreach { c =>
@@ -51,7 +51,7 @@ object MaintenanceProbe {
         Seq(entry(b, c.toLong, 0), entry(b, c.toLong, 1)))
       table.commitSnapshot(Snapshot(c.toLong, 0, schema, buckets,
         snap.epochs + c.toLong,
-        table.successorFiles(snap, touched, newFiles)))
+        table.successorFiles(snap, touched, newFiles)), CommitSummary("merge", Some(c.toLong)))
     }
     val buildSecs = (System.nanoTime() - t0) / 1e9
     val nFiles = table.currentSnapshot().get.allFiles.size

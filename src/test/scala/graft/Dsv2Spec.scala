@@ -607,7 +607,8 @@ class Dsv2Spec extends AnyFunSuite {
       "maxVersionsPerTrigger" -> "1.5", "maxVersionsPerTrigger" -> "0",
       "maxVersionsPerTrigger" -> "9999999999",
       "maxBytesPerTrigger" -> "", "maxBytesPerTrigger" -> "-4096",
-      "versionAsOf" -> "-1", "changesTo" -> "latest", "changesFrom" -> "1e3")
+      "versionAsOf" -> "-1", "changesTo" -> "latest", "changesFrom" -> "1e3",
+      "changesFrom" -> "999") // above the current version: no such snapshot
     val loads = Seq[(String, (String, String) => Any)](
       "batch" -> ((o, v) => spark.read.format("graft").option(o, v).load(table.root)),
       "stream" -> ((o, v) => spark.readStream.format("graft").option(o, v).load(table.root)))
@@ -629,6 +630,11 @@ class Dsv2Spec extends AnyFunSuite {
       spark.read.option("maxSplitBytes", "12MB").table("graft_opt.db.t").collect()
     }
     assert(viaCatalog.getMessage.contains("maxSplitBytes"), viaCatalog.getMessage)
+    val fromAbove = intercept[IllegalArgumentException] {
+      spark.read.option("changesFrom", "7").table("graft_opt.db.t").collect()
+    }
+    assert(fromAbove.getMessage.contains("changesFrom") && fromAbove.getMessage.contains("at or below 1"),
+      fromAbove.getMessage)
     // well-formed values still read
     assert(spark.read.format("graft").option("maxSplitBytes", "4096")
       .option("startingVersion", "0").load(table.root).count() == table.read().count())
@@ -1804,7 +1810,8 @@ class Dsv2Spec extends AnyFunSuite {
     // legacy-table shape: no high-water mark → DML must fall back to a
     // max-lsn that still SEES the tombstone at 100
     val snap = table.currentSnapshot().get
-    table.commitSnapshot(snap.copy(version = snap.version + 1, highWaterLsn = None))
+    table.commitSnapshot(snap.copy(version = snap.version + 1, highWaterLsn = None),
+      graft.lake.CommitSummary("alter"))
     assert(table.currentSnapshot().get.highWaterLsn.isEmpty)
 
     // a MATCHED clause keeps this on the row-level DELTA path (an

@@ -236,7 +236,8 @@ class EnrichedViewSpec extends AnyFunSuite {
         StructField("lsn", LongType), StructField("tier", IntegerType),
         StructField("content_len", LongType),
         StructField(LakeTable.DeletedCol, BooleanType, nullable = false))),
-      numBuckets = 4, epochs = Set.empty, filesRef = InlineFiles(Seq.empty)))
+      numBuckets = 4, epochs = Set.empty, filesRef = InlineFiles(Seq.empty)),
+      graft.lake.CommitSummary("create"))
     assert(EnrichedView.lastRefreshed(view).isEmpty)
     val s1 = EnrichedView.refresh(base, view, enrichWith(dim(base)),
       numBuckets = 4, saltBuckets = 2)

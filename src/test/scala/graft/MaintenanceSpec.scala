@@ -249,69 +249,154 @@ class MaintenanceSpec extends AnyFunSuite {
   }
 
   test("crash between data write and snapshot commit: retry converges") {
-    // the dangerous window (SURVEY §7.4.3): data files for version N are
-    // on disk but the snapshot pointer never landed. A retry of the same
-    // epoch must overwrite the orphaned files and commit exactly once.
-    val (table, _) = replayed(1000L, 2)
+    // the dangerous window (SURVEY §7.4.3): data files and the quarantine
+    // file for version N are on disk but the snapshot pointer never
+    // landed. Nothing the attempt wrote may show before the publish, and a
+    // retry of the same epoch must commit it exactly once.
+    import spark.implicits._
+    val cfg = GenConfig(nEvents = 1000L)
+    val work = TestSpark.tmpDir("maint")
+    ChangeGen.writeLog(spark, cfg, s"$work/log", nBatches = 2, partitions = 2)
+    val ts = java.sql.Timestamp.valueOf("2024-03-01 00:00:00")
+    Seq((9000001L, "I", ts, null: String, "p/1", "c", "text", "poison"),
+        (9000002L, "U", ts, "r/poison", null: String, "c", "text", "poison"))
+      .toDF("lsn", "op", "ts", "repo", "path", "commit", "lang", "content")
+      .coalesce(1).write.mode("append").parquet(s"$work/log/batch-00001")
+    val table = new LakeTable(spark, s"$work/table")
+    def replay() = BatchReplay.replay(spark, s"$work/log", table, numBuckets = 4,
+      saltBuckets = 2, recordMeta = true)
+    replay()
     val v = table.currentSnapshot().get.version
+    val epoch = 1L // the epoch that produced version v
     val stateBefore = table.read().orderBy("repo", "path").collect().map(_.toString).toSeq
+    val deadAttempt = table.currentSnapshot().get.quarantine
+    assert(deadAttempt.size == 1)
+    spark.conf.set("spark.sql.catalog.graft_crash", classOf[graft.lake.dsv2.GraftCatalog].getName)
+    def historyEpochs() = spark.sql(s"CALL graft_crash.system.history('${table.root}')")
+      .where(col("epoch") === epoch).count()
+    def shown() = (graft.merge.Meta.quarantine(table).where(col("_epoch") === epoch).count(),
+      graft.merge.Meta.metrics(table).where(col("epoch") === epoch).count(), historyEpochs())
 
-    // simulate the crash: delete the LAST snapshot file, keep its data dir
+    // simulate the crash: delete the LAST snapshot file, keep everything else
     val fs = new org.apache.hadoop.fs.Path(table.root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.delete(new org.apache.hadoop.fs.Path(s"${table.root}/_snapshots/v$v"), false))
     assert(table.currentSnapshot().get.version == v - 1)
+    assert(shown() == (0L, 0L, 0L), "an unpublished epoch is visible")
 
-    // retry the epoch that produced version v (epoch id = v here)
-    val work = table.root.stripSuffix("/table")
-    BatchReplay.replay(spark, s"$work/log", table, numBuckets = 4, saltBuckets = 2,
-      recordMeta = false)
+    // retry: the ledger skips epoch 0 and re-applies epoch 1
+    replay()
     assert(table.currentSnapshot().get.version == v)
     val stateAfter = table.read().orderBy("repo", "path").collect().map(_.toString).toSeq
     assert(stateAfter == stateBefore)
-  }
+    assert(shown() == (2L, 1L, 1L), "the retried epoch must land exactly once")
 
+    // the dead attempt's quarantine file is unreferenced: vacuum reclaims it
+    val removed = Maintenance.vacuum(table, retentionMs = 0L)
+    assert(removed.contains(s"meta/quarantine/${deadAttempt.head}"))
+    assert(spark.read.json(s"${table.root}/meta/quarantine").count() == 2L)
+    assert(graft.merge.Meta.quarantine(table).count() == 2L)
+  }
   test("compact rejects a non-positive byte budget before doing any work") {
     val (table, _) = replayed(200L, 2)
     val before = table.snapshotVersions()
     intercept[IllegalArgumentException](Maintenance.compact(table, targetFileBytes = 0L))
     intercept[IllegalArgumentException](Maintenance.compact(table, maxFilesPerBucket = 0))
-    // no half-done maintenance: neither a data commit nor a meta compaction ran
+    // no half-done maintenance: no commit ran
     assert(table.snapshotVersions() == before)
   }
 
-  test("meta tables with pre-upgrade schemas stay readable and compactable") {
+  test("a pre-upgrade snapshot without a summary reads in history with null summaries") {
     import spark.implicits._
     val work = TestSpark.tmpDir("metaschema")
     val table = new LakeTable(spark, s"$work/table")
     val ts = java.sql.Timestamp.valueOf("2024-03-01 00:00:00")
-    new graft.merge.MergeInto(table, numBuckets = 2, saltBuckets = 1, recordMeta = true)
-      .apply(Seq((1L, "U", ts, "r/a", "f", "c", "t", "x"))
-        .toDF("lsn", "op", "ts", "repo", "path", "commit", "lang", "content"), 0L): Unit
-    // simulate a part written before events_quarantined existed: parquet
-    // dirs with mixed footers must read with the UNION schema, not
-    // whichever single footer Spark happens to sample
-    Seq((99L, 98L, 5L, 5L, 5L, 0L, 1, 10L))
-      .toDF("epoch", "version", "events_in", "approx_distinct_lsn", "keys_written",
-        "tombstones_written", "buckets_touched", "duration_ms")
-      .coalesce(1).write.mode("append").parquet(s"${table.root}/meta/metrics")
-    def metrics() = graft.merge.Meta.metrics(table)
-    assert(metrics().count() == 2)
-    assert(metrics().where(col("epoch") === 99L)
-      .select("events_quarantined").head.isNullAt(0)) // evolved column, old row
-    assert(metrics().where(col("epoch") === 0L)
-      .select("events_quarantined").head.getLong(0) == 0L)
-    // meta compaction consolidates under the union schema, losing nothing
-    assert(Maintenance.compactMeta(table, maxFiles = 1) >= 1)
-    assert(metrics().count() == 2)
-    assert(metrics().columns.contains("events_quarantined"))
+    def events(lsn: Long) = Seq((lsn, "U", ts, "r/a", "f", "c", "t", "x"))
+      .toDF("lsn", "op", "ts", "repo", "path", "commit", "lang", "content")
+    val merge = new graft.merge.MergeInto(table, numBuckets = 2, saltBuckets = 1, recordMeta = true)
+    merge.apply(events(1L), 0L): Unit
+    // v1 as an engine that predates commit summaries wrote it
+    val snap = table.currentSnapshot().get
+    val legacy = graft.lake.Snapshot.serialize(snap.copy(version = 1L, summary = None))
+    assert(!legacy.contains("commit="))
+    val fs = new org.apache.hadoop.fs.Path(table.root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(new org.apache.hadoop.fs.Path(s"${table.root}/_snapshots/v1"), false)
+    try out.write(legacy.getBytes("UTF-8")) finally out.close()
+    merge.apply(events(2L), 2L): Unit
+
+    spark.conf.set("spark.sql.catalog.graft_legacy", classOf[graft.lake.dsv2.GraftCatalog].getName)
+    val hist = spark.sql(s"CALL graft_legacy.system.history('${table.root}')")
+      .orderBy("version").collect()
+    assert(hist.map(_.getAs[Long]("version")).toSeq == Seq(0L, 1L, 2L))
+    val summaryCols = Seq("operation", "epoch", "events_in", "events_quarantined",
+      "keys_written", "tombstones_written", "phase_ms")
+    assert(summaryCols.forall(c => hist(1).isNullAt(hist(1).fieldIndex(c))),
+      s"legacy row: ${hist(1)}")
+    // the legacy row's manifest columns still come from its file list
+    assert(hist(1).getAs[Int]("files") == snap.allFiles.size)
+    for ((r, e) <- Seq((hist(0), 0L), (hist(2), 2L))) {
+      assert(r.getAs[String]("operation") == "merge" && r.getAs[Long]("epoch") == e)
+      assert(r.getAs[Long]("events_in") == 1L && r.getAs[Long]("keys_written") == 1L)
+      assert(r.getAs[Map[String, Long]]("phase_ms").contains("merge_write"))
+    }
+    assert(graft.merge.Meta.metrics(table).select("epoch").as[Long].collect().sorted.toSeq ==
+      Seq(0L, 2L))
+  }
+  test("quarantine, summaries and metrics carry across compact, rebucket, ALTER, expiry and vacuum") {
+    import spark.implicits._
+    val wh = TestSpark.tmpDir("carry")
+    spark.conf.set("spark.sql.catalog.graft_carry", classOf[graft.lake.dsv2.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graft_carry.warehouse", wh)
+    val table = new LakeTable(spark, s"$wh/db/t")
+    val ts = java.sql.Timestamp.valueOf("2024-03-01 00:00:00")
+    val merge = new graft.merge.MergeInto(table, numBuckets = 4, saltBuckets = 2, recordMeta = true)
+    def events(e: Long, poison: Boolean) = ((0 until 20).map(i =>
+      (java.lang.Long.valueOf(e * 100 + i), "U", ts, s"r$i", s"f$i", "c", "t", s"v$e")) ++
+      (if (!poison) Nil else Seq(
+        (java.lang.Long.valueOf(e * 100 + 50), "I", ts, null, "bad", "c", "t", "poison"),
+        (null.asInstanceOf[java.lang.Long], "I", ts, "r/x", "bad2", "c", "t", "poison"))))
+      .toDF("lsn", "op", "ts", "repo", "path", "commit", "lang", "content")
+    merge.apply(events(0, poison = false), 0L)
+    merge.apply(events(1, poison = true), 1L)
+    merge.apply(events(2, poison = false), 2L)
+    assert(Maintenance.compact(table, maxFilesPerBucket = 1) > 0)
+    Maintenance.rebucket(table, 3): Unit
+    spark.sql("ALTER TABLE graft_carry.db.t ADD COLUMN license STRING")
+    val qFiles = table.currentSnapshot().get.quarantine
+    assert(qFiles.size == 1, "the quarantine reference must survive every non-merge commit")
+
+    def history() = spark.sql(s"CALL graft_carry.system.history('${table.root}')").collect()
+    val ops = history().map(r => r.getAs[String]("operation")).toSeq
+    assert(ops == Seq("alter", "rebucket", "compact", "merge", "merge", "merge"))
+    history().filter(_.getAs[String]("operation") != "merge").foreach { r =>
+      assert(Seq("epoch", "events_in", "events_quarantined", "keys_written", "tombstones_written")
+        .forall(c => r.isNullAt(r.fieldIndex(c))), s"non-merge commit reports counters: $r")
+    }
+    // one row per merge epoch: a summary is not inherited by the commits after it
+    val m = graft.merge.Meta.metrics(table)
+    assert(m.select("epoch").as[Long].collect().sorted.toSeq == Seq(0L, 1L, 2L))
+    assert(m.where(col("epoch") === 1L).select("events_quarantined").as[Long].head() == 2L)
+
+    assert(Maintenance.expireSnapshots(table, keepLast = 1, olderThanMs = 0L).nonEmpty)
+    Maintenance.vacuum(table, retentionMs = 0L): Unit
+    // summaries expire with their snapshots; the quarantine rows do not
+    assert(history().map(_.getAs[String]("operation")).toSeq == Seq("alter"))
+    assert(graft.merge.Meta.metrics(table).count() == 0L)
+    val q = graft.merge.Meta.quarantine(table)
+    assert(q.count() == 2L && q.where(col("_epoch") === 1L).count() == 2L)
+    assert(spark.read.json(s"${table.root}/meta/quarantine/${qFiles.head}").count() == 2L)
+    val r = spark.sql(s"CALL graft_carry.system.replay_quarantine('${table.root}')").head()
+    assert(r.getLong(1) == 2L && r.getLong(2) == 2L, s"still-poison rows replay and re-quarantine: $r")
+    assert(table.currentSnapshot().get.quarantine.size == 2)
   }
 
   test("concurrent snapshot commit of the same version is rejected") {
     val (table, _) = replayed(200L, 1)
     val snap = table.currentSnapshot().get
     val clash = snap.copy(epochs = snap.epochs + 999L)
-    intercept[graft.lake.CommitConflictException](table.commitSnapshot(clash))
+    intercept[graft.lake.CommitConflictException](
+      table.commitSnapshot(clash, graft.lake.CommitSummary("merge", Some(999L))))
   }
 
   test("concurrent writers rebase on commit conflict: every epoch lands exactly once") {
@@ -395,36 +480,6 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(onDisk == referenced)
   }
 
-  test("meta tables stay bounded: compaction folds per-epoch files into one") {
-    val cfg = GenConfig(nEvents = 600L)
-    val work = TestSpark.tmpDir("metacompact")
-    ChangeGen.writeLog(spark, cfg, s"$work/log", nBatches = 6, partitions = 2)
-    val table = new LakeTable(spark, s"$work/table")
-    BatchReplay.replay(spark, s"$work/log", table, numBuckets = 4, recordMeta = true)
-    val fs = new org.apache.hadoop.fs.Path(table.root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def parts(name: String): Int = {
-      val p = new org.apache.hadoop.fs.Path(s"${table.root}/meta/$name")
-      if (!fs.exists(p)) 0
-      else fs.listStatus(p).count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    }
-    val before = graft.merge.Meta.metrics(table).collect().map(_.toString).sorted.toSeq
-    assert(parts("metrics") >= 6, "expected one metrics file per epoch before compaction")
-    assert(Maintenance.compactMeta(table, maxFiles = 2) >= 2) // metrics + lineage
-    // readers already see one logical file; victims age out through the
-    // grace window (see the consolidate-into-place test), after which the
-    // physical count drops to one per table
-    for (n <- Seq("metrics", "lineage")) {
-      val m = new org.apache.hadoop.fs.Path(s"${table.root}/meta/.compact-pending-$n")
-      if (fs.exists(m)) fs.setTimes(m, System.currentTimeMillis() - 2L * 3600 * 1000, -1)
-    }
-    val after = graft.merge.Meta.metrics(table).collect().map(_.toString).sorted.toSeq
-    graft.merge.Meta.lineage(table).count()
-    assert(parts("metrics") == 1 && parts("lineage") == 1)
-    assert(after == before, "meta compaction changed the metrics rows")
-    assert(Maintenance.compactMeta(table, maxFiles = 2) == 0) // idempotent
-  }
-
   test("stats pruning: a compaction-only version diff reads zero data files") {
     val (table, _) = replayed(1500L, 3)
     val v1 = table.currentSnapshot().get.version
@@ -481,105 +536,6 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(fs.exists(stranded))
     assert(Maintenance.vacuum(table, retentionMs = 0L).contains("_dml/q-dead"))
     assert(!fs.exists(stranded))
-  }
-
-  test("compactMeta swap interrupted between renames is repaired on read") {
-    val cfg = GenConfig(nEvents = 400L)
-    val work = TestSpark.tmpDir("metarepair")
-    ChangeGen.writeLog(spark, cfg, s"$work/log", nBatches = 3, partitions = 2)
-    val table = new LakeTable(spark, s"$work/table")
-    BatchReplay.replay(spark, s"$work/log", table, numBuckets = 4, recordMeta = true)
-    val rows = graft.merge.Meta.metrics(table).collect().map(_.toString).sorted.toSeq
-    val fs = new org.apache.hadoop.fs.Path(table.root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dir = new org.apache.hadoop.fs.Path(s"${table.root}/meta/metrics")
-    val tmp = new org.apache.hadoop.fs.Path(s"${table.root}/meta/.metrics.compact")
-    // crash state: tmp fully written, dir renamed aside then lost mid-swap
-    // (tmp IS the consolidated table at that point — simulate by moving
-    // the live dir into the tmp slot)
-    assert(fs.rename(dir, tmp))
-    val repaired = graft.merge.Meta.metrics(table).collect().map(_.toString).sorted.toSeq
-    assert(repaired == rows, "repair must surface the compacted rows")
-    assert(fs.exists(dir) && !fs.exists(tmp))
-    // stale leftovers next to a live dir are cleaned, not swapped in
-    val old = new org.apache.hadoop.fs.Path(s"${table.root}/meta/.metrics.old")
-    fs.mkdirs(old)
-    assert(graft.merge.Meta.metrics(table).collect().map(_.toString).sorted.toSeq == rows)
-    assert(!fs.exists(old))
-  }
-
-  test("compactMeta: consolidate-into-place survives crashes and concurrent appends") {
-    val cfg = GenConfig(nEvents = 400L)
-    val work = TestSpark.tmpDir("metacompact2")
-    ChangeGen.writeLog(spark, cfg, s"$work/log", nBatches = 3, partitions = 2)
-    val table = new LakeTable(spark, s"$work/table")
-    BatchReplay.replay(spark, s"$work/log", table, numBuckets = 4, recordMeta = true)
-    val fs = new org.apache.hadoop.fs.Path(table.root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dir = new org.apache.hadoop.fs.Path(s"${table.root}/meta/metrics")
-    def parts(): Seq[String] = fs.listStatus(dir).filter(_.isFile)
-      .map(_.getPath.getName).filter(_.endsWith(".parquet")).toSeq
-    def rows(): Seq[String] =
-      graft.merge.Meta.metrics(table).collect().map(_.toString).sorted.toSeq
-    val baseline = rows()
-    assert(parts().size == 3) // one per epoch
-
-    // normal run lands the consolidated file BESIDE the victims with an
-    // intent marker; victims stay on disk through the grace window (an
-    // in-flight reader that planned them must not lose its files) while
-    // readers already exclude them — no double-count
-    val marker0 = new org.apache.hadoop.fs.Path(s"${table.root}/meta/.compact-pending-metrics")
-    assert(Maintenance.compactMeta(table, maxFiles = 1) >= 1)
-    assert(parts().size == 4 && rows() == baseline && fs.exists(marker0))
-    // a second compaction within the grace window is a no-op (pending)
-    assert(Maintenance.compactMeta(table, maxFiles = 1) == 0)
-    // once the marker ages past the grace window, the next READ sweeps
-    // victims and marker
-    fs.setTimes(marker0, System.currentTimeMillis() - 2L * 3600 * 1000, -1)
-    assert(rows() == baseline)
-    assert(parts().size == 1 && !fs.exists(marker0))
-
-    // crash window A: consolidated LANDED, victims not yet swept, marker
-    // live — a reader must not double-count; aging the marker finishes it
-    val victims = parts()
-    import spark.implicits._
-    val dup = s"c-craft.parquet"
-    val stage = new org.apache.hadoop.fs.Path(s"${table.root}/meta/.crafttmp")
-    spark.read.option("mergeSchema", "true")
-      .parquet(victims.map(v => s"${table.root}/meta/metrics/$v"): _*)
-      .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-    val stagedPart = fs.listStatus(stage).map(_.getPath)
-      .find(_.getName.startsWith("part-")).get
-    assert(fs.rename(stagedPart, new org.apache.hadoop.fs.Path(dir, dup)))
-    val marker = new org.apache.hadoop.fs.Path(s"${table.root}/meta/.compact-pending-metrics")
-    val out = fs.create(marker, true)
-    out.write((dup +: victims).mkString("", "\n", "\n").getBytes("UTF-8")); out.close()
-    // an append landing in this window (a concurrent epoch) must survive
-    val extra = Seq((999L, 99L, 1L, 0L, 1L, 1L, 0L, 1, 1L))
-      .toDF("epoch", "version", "events_in", "events_quarantined",
-        "approx_distinct_lsn", "keys_written", "tombstones_written",
-        "buckets_touched", "duration_ms").coalesce(1)
-    graft.merge.Meta.atomicAppend(table, extra, s"${table.root}/meta/metrics", "parquet")
-    val withExtra = rows()
-    assert(withExtra.size == baseline.size + 1, "no double-count, append visible")
-    // within the grace window nothing is swept (the marker is fresh)
-    assert(fs.exists(marker), "fresh marker survives the read")
-    // aging the marker lets the next read finish the crashed compaction
-    fs.setTimes(marker, System.currentTimeMillis() - 2L * 3600 * 1000, -1)
-    assert(rows() == withExtra)
-    assert(!fs.exists(marker))
-    assert(victims.forall(v => !fs.exists(new org.apache.hadoop.fs.Path(dir, v))))
-
-    // crash window B: marker written, consolidated NEVER landed — victims
-    // stay authoritative; a FRESH marker is left alone, a stale one sweeps
-    val out2 = fs.create(marker, true)
-    out2.write(("c-never.parquet" +: parts()).mkString("", "\n", "\n").getBytes("UTF-8"))
-    out2.close()
-    assert(rows() == withExtra, "victims still authoritative")
-    assert(fs.exists(marker), "fresh marker must not be swept")
-    fs.setTimes(marker, System.currentTimeMillis() - 2L * 3600 * 1000, -1)
-    assert(rows() == withExtra)
-    assert(!fs.exists(marker), "stale marker swept on read")
   }
 
   test("vacuum removes exactly the orphaned data dirs of a crashed writer") {

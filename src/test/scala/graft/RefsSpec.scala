@@ -181,7 +181,8 @@ class RefsSpec extends AnyFunSuite {
     // legacy table shape: strip the high-water mark (one stats-less commit
     // makes it permanently None), forcing revert onto the fallback path
     val snap = table.currentSnapshot().get
-    table.commitSnapshot(snap.copy(version = snap.version + 1, highWaterLsn = None))
+    table.commitSnapshot(snap.copy(version = snap.version + 1, highWaterLsn = None),
+      graft.lake.CommitSummary("alter"))
     assert(table.currentSnapshot().get.highWaterLsn.isEmpty)
 
     Maintenance.revert(table, v1)

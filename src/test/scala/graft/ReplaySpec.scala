@@ -302,10 +302,17 @@ class ReplaySpec extends AnyFunSuite {
     pool.shutdown()
     assert(stats.forall(s => !s.skipped && s.eventsQuarantined == 2))
     // exactly 2 quarantine rows per epoch — retries must not duplicate them
-    val q = spark.read.json(s"${table.root}/meta/quarantine")
+    val q = Meta.quarantine(table)
     assert(q.count() == epochs.size * 2L,
       s"quarantine duplicated rows: ${q.groupBy("_epoch").count().collect().toSeq}")
     epochs.foreach(e => assert(q.where(col("_epoch") === e).count() == 2L))
+    // the attempts that lost a race left unreferenced files; once vacuum
+    // has reclaimed them the raw directory holds exactly the committed rows
+    graft.lake.Maintenance.vacuum(table, retentionMs = 0L): Unit
+    val raw = spark.read.json(s"${table.root}/meta/quarantine")
+    assert(raw.count() == epochs.size * 2L,
+      s"raw quarantine rows after vacuum: ${raw.groupBy("_epoch").count().collect().toSeq}")
+    epochs.foreach(e => assert(raw.where(col("_epoch") === e).count() == 2L))
   }
 
   test("schema registry: widen ok, narrow/illegal rejected") {

@@ -108,7 +108,7 @@ class WriteStatsSpec extends AnyFunSuite {
     val legacy = new java.io.File(legacyDir).listFiles().filter(_.getName.endsWith(".parquet"))
       .map(f => FileEntry(b, s"data/legacy/b=$b/${f.getName}", nBytes = f.length())).toSeq
     table.commitSnapshot(snap.copy(version = snap.version + 1, highWaterLsn = None,
-      filesRef = InlineFiles(snap.allFiles ++ legacy)))
+      filesRef = InlineFiles(snap.allFiles ++ legacy)), graft.lake.CommitSummary("merge"))
 
     assert(Maintenance.compact(table, maxFilesPerBucket = 1) > 0)
     val compacted = table.currentSnapshot().get.allFiles
@@ -143,6 +143,9 @@ class WriteStatsSpec extends AnyFunSuite {
     s.conf.set("spark.sql.shuffle.partitions", "3")
     val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val resultTasks = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
+    // (job id, its stage names): a stage is named after the engine call
+    // that ran it, so the data write's job reads "writeParquet at ..."
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
         val props = Option(js.properties)
@@ -150,6 +153,7 @@ class WriteStatsSpec extends AnyFunSuite {
           descriptions.add(props.flatMap(p => Option(p.getProperty("spark.job.description")))
             .getOrElse(""))
           resultTasks.add(js.stageInfos.maxBy(_.stageId).numTasks)
+          jobs.add((js.jobId, js.stageInfos.map(_.name).mkString("; ")))
         }
       }
     }
@@ -157,7 +161,9 @@ class WriteStatsSpec extends AnyFunSuite {
     s.sparkContext.addSparkListener(listener)
     try {
       s.sparkContext.setJobGroup("writestage", "merge onto a many-file table")
-      val st = new MergeInto(measured, numBuckets = 16, saltBuckets = 4, recordMeta = false)
+      // recordMeta on, as in production: a poison-free epoch records
+      // everything in its snapshot and starts no job after the write
+      val st = new MergeInto(measured, numBuckets = 16, saltBuckets = 4, recordMeta = true)
         .apply(events(s, 4000, 4400), 1L)
       s.sparkContext.clearJobGroup()
       assert(st.bucketsTouched * 4 > 3, "fixture: touched × salt must exceed the cap")
@@ -171,6 +177,11 @@ class WriteStatsSpec extends AnyFunSuite {
       assert(resultTasks.size >= 2)
       assert(resultTasks.asScala.forall(_ <= 3),
         s"reduce stages ran ${resultTasks.asScala.mkString(",")} tasks; the session allows 3")
+      val writeJobs = jobs.asScala.filter(_._2.contains("writeParquet at")).map(_._1)
+      assert(writeJobs.size == 1, s"expected one data-write job: ${jobs.asScala.mkString(" | ")}")
+      val after = jobs.asScala.filter(_._1 > writeJobs.head)
+      assert(st.eventsQuarantined == 0L && after.isEmpty,
+        s"jobs started after the data write: ${after.mkString(" | ")}")
     } finally {
       s.sparkContext.removeSparkListener(listener)
       s.sparkContext.clearJobGroup()
