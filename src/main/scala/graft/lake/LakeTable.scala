@@ -137,12 +137,7 @@ final case class Snapshot(
     unorderedCommits: Long = 0L,
     /** What the commit that published this version did. None on
       * snapshots written before commits recorded it. */
-    summary: Option[CommitSummary] = None,
-    /** Quarantine files (names under `meta/quarantine/`) of every epoch
-      * in the ledger that diverted poison rows. Cumulative like the
-      * ledger: each commit carries its predecessor's list forward, so the
-      * rows stay readable after the version that wrote them expires. */
-    quarantine: Seq[String] = Nil
+    summary: Option[CommitSummary] = None
 ) {
   /** Entries for the given buckets; split listings load only the groups
     * that can contain them. */
@@ -168,18 +163,27 @@ final case class Snapshot(
 /** What one commit did, written into the snapshot it publishes — so the
   * record becomes visible atomically with the data, or not at all.
   * `operation` is merge, compact, rebucket, rollback, alter or create.
-  * A merge also records its `epoch`, its counters (the `Meta.metrics`
-  * columns: events_in, events_quarantined, approx_distinct_lsn,
-  * keys_written, tombstones_written, buckets_touched, duration_ms), the
-  * milliseconds of each phase before the publish, and the data directory
-  * it wrote (lineage reads that directory's entries back). A snapshot
-  * cannot time its own publish: `duration_ms` and `phaseMs` stop at it. */
+  * A merge also records its `epoch`, its [[CommitSummary.MergeCounters]],
+  * the milliseconds of each phase before the publish, and the data
+  * directory it wrote (lineage reads that directory's entries back). A
+  * snapshot cannot time its own publish: `duration_ms` and `phaseMs` stop
+  * at it. */
 final case class CommitSummary(
     operation: String,
     epoch: Option[Long] = None,
     counters: Map[String, Long] = Map.empty,
     phaseMs: Map[String, Long] = Map.empty,
     writeDir: Option[String] = None)
+
+object CommitSummary {
+  /** The counters a merge records, in `Meta.metrics` column order; the
+    * one place their names are spelled (`MergeStats.counters` fills them,
+    * `Meta.metrics` and `history` read them). `buckets_touched` reads
+    * back as an int, the others as longs. */
+  val MergeCounters: Seq[String] = Seq("events_in", "events_quarantined",
+    "approx_distinct_lsn", "keys_written", "tombstones_written", "buckets_touched",
+    "duration_ms")
+}
 
 object Snapshot {
   private val Header = "graft-snapshot v1"
@@ -252,8 +256,6 @@ object Snapshot {
         serializeLongs(c.counters), serializeLongs(c.phaseMs), c.writeDir.getOrElse(""))
         .map(orDash).mkString("\t")).append('\n')
     }
-    if (s.quarantine.nonEmpty)
-      sb.append("quarantine=").append(s.quarantine.mkString(",")).append('\n')
     sb.toString
   }
 
@@ -331,14 +333,12 @@ object Snapshot {
     text.split('\n').filter(_.startsWith("file=")).toSeq
       .map(ln => parseFileLine(ln.stripPrefix("file=")))
 
-  /** The `gid<TAB>name` manifest refs of a split root: comma-joined on one
-    * `manifest=` line, or one line each in roots written before that. */
   private[lake] def manifestRefs(text: String): Seq[(Int, String)] =
-    text.split('\n').filter(_.startsWith("manifest=")).toSeq
-      .flatMap(_.stripPrefix("manifest=").split(',').filter(_.nonEmpty)).map { v =>
-        val t = v.indexOf('\t')
-        (v.substring(0, t).toInt, v.substring(t + 1))
-      }
+    text.split('\n').filter(_.startsWith("manifest=")).toSeq.map { ln =>
+      val v = ln.stripPrefix("manifest=")
+      val t = v.indexOf('\t')
+      (v.substring(0, t).toInt, v.substring(t + 1))
+    }
 
   /** Root header + inline file lines (split roots handled by LakeTable,
     * which owns the manifest directory). */
@@ -357,7 +357,6 @@ object Snapshot {
     var highWater: Option[Long] = None
     var unordered = 0L
     var summary: Option[CommitSummary] = None
-    var quarantine = Seq.empty[String]
     lines.drop(1).filter(_.nonEmpty).foreach { ln =>
       val i = ln.indexOf('=')
       val (k, v) = (ln.substring(0, i), ln.substring(i + 1))
@@ -373,12 +372,11 @@ object Snapshot {
           val f = v.split('\t').map(x => if (x == "-") "" else x)
           summary = Some(CommitSummary(f(0), Option(f(1)).filter(_.nonEmpty).map(_.toLong),
             parseLongs(f(2)), parseLongs(f(3)), Option(f(4)).filter(_.nonEmpty)))
-        case "quarantine" => quarantine = v.split(',').toSeq
         case _ => // forward-compatible: ignore unknown keys (file=/manifest= included)
       }
     }
     Snapshot(version, schemaVersion, schema, numBuckets, epochs,
-      InlineFiles(Seq.empty), highWater, unordered, summary, quarantine)
+      InlineFiles(Seq.empty), highWater, unordered, summary)
   }
 
   def deserialize(text: String): Snapshot =
@@ -588,11 +586,11 @@ final class LakeTable(
       case InlineFiles(es) => // crossing the threshold: split everything once
         val refs = writeGroupManifests(es.groupBy(_.bucket % manifestGroupCount), f)
         Snapshot.serializeHeader(snap) +
-          refs.map { case (gid, name) => s"$gid\t$name" }.mkString("manifest=", ",", "\n")
+          refs.map { case (gid, name) => s"manifest=$gid\t$name" }.mkString("", "\n", "\n")
       case SplitFiles(carried, updated, _, _) =>
         val refs = (carried ++ writeGroupManifests(updated, f)).sortBy(_._1)
         Snapshot.serializeHeader(snap) +
-          refs.map { case (gid, name) => s"$gid\t$name" }.mkString("manifest=", ",", "\n")
+          refs.map { case (gid, name) => s"manifest=$gid\t$name" }.mkString("", "\n", "\n")
     }
     val dst = new Path(snapshotDir, s"v${snap.version}")
     if (!writeAtomic(f, dst, body))
@@ -655,8 +653,9 @@ final class LakeTable(
   /** Write `df` (one partition) as ONE `format` file named `name` under
     * `meta/<dir>/`: Spark writes into a dot-prefixed staging directory,
     * which readers skip, and the single part file is then renamed into
-    * place, so a reader sees the whole file or none of it. A crash strands
-    * only the staging directory; `Maintenance.vacuum` sweeps it once aged. */
+    * place, so a reader sees the whole file or none of it. A file already
+    * at `name` is replaced. A crash strands only the staging directory;
+    * `Maintenance.vacuum` sweeps it once aged. */
   private[graft] def writeMetaFile(df: DataFrame, format: String, dir: String,
                                    name: String): Unit = {
     val f = fs
@@ -664,10 +663,11 @@ final class LakeTable(
     df.write.mode("overwrite").format(format).save(stage.toString)
     val parts = f.listStatus(stage).map(_.getPath).filter(_.getName.startsWith("part-"))
     require(parts.length == 1, s"expected one part file in $stage, found ${parts.length}")
-    val dst = new Path(root, s"meta/$dir")
-    f.mkdirs(dst)
-    if (!f.rename(parts.head, new Path(dst, name)))
-      throw new IllegalStateException(s"meta file rename failed into $dst")
+    val dst = new Path(root, s"meta/$dir/$name")
+    f.mkdirs(dst.getParent)
+    // a local rename replaces the destination; HDFS refuses, so delete first
+    if (!f.rename(parts.head, dst) && !(f.delete(dst, false) && f.rename(parts.head, dst)))
+      throw new IllegalStateException(s"meta file rename failed onto $dst")
     f.delete(stage, true): Unit
   }
 

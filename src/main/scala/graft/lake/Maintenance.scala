@@ -212,8 +212,8 @@ object Maintenance {
     *   - restores `toVersion`'s epoch ledger, so the undone epochs are
     *     re-appliable (they are genuinely no longer applied) while a
     *     crash-retry of a PRE-rollback epoch stays a no-op — and with it
-    *     `toVersion`'s quarantine references: the undone epochs' poison
-    *     rows re-quarantine if those epochs are redelivered;
+    *     drops the undone epochs' quarantine files from view: their
+    *     poison rows re-quarantine if those epochs are redelivered;
     *   - restores `toVersion`'s high-water mark, and bumps the cumulative
     *     `unorderedCommits` counter past the current head's: rows REVERT
     *     to lsns at or below any spanning range's anchor mark — exactly
@@ -335,8 +335,9 @@ object Maintenance {
   /** Remove orphaned data directories, manifest files and quarantine
     * files — left by writers that crashed (or lost a commit race) between
     * writing and committing the snapshot root — plus aged `meta/.append-*`
-    * staging directories of crashed meta-file writes. An artifact is an orphan iff NO
-    * committed snapshot references it AND it is older than `retentionMs`
+    * staging directories of crashed meta-file writes. An artifact is an
+    * orphan iff NO committed snapshot references it (a quarantine file:
+    * ledgers its epoch) AND it is older than `retentionMs`
     * (modification-time cutoff, the Iceberg remove-orphan-files rule):
     * an IN-FLIGHT writer's artifacts are unreferenced by construction
     * until its commit lands, so an age gate — not reachability alone —
@@ -355,12 +356,8 @@ object Maintenance {
     val referenced = new scala.collection.mutable.HashSet[String]
     val visited = new scala.collection.mutable.HashSet[String]
     val refManifests = new scala.collection.mutable.HashSet[String]
-    val refQuarantine = new scala.collection.mutable.HashSet[String]
     lineages.foreach { t =>
-      t.snapshotVersions().foreach { v =>
-        refManifests ++= t.manifestRefsOf(v)
-        refQuarantine ++= t.snapshotAt(v).quarantine
-      }
+      t.snapshotVersions().foreach(v => refManifests ++= t.manifestRefsOf(v))
     }
     foreachEntry(
       lineages.iterator.flatMap(t => t.snapshotVersions().map(v => (t, v))),
@@ -379,19 +376,24 @@ object Maintenance {
     // clean their own dir, but a driver crash between task commits and
     // batch commit strands it — no snapshot ever references staging, so
     // ordinary reachability would never reclaim it
-    // and the same sweep for what no snapshot can reference: quarantine
-    // files of attempts that never published, and `meta/.append-*`
-    // staging dirs of crashed meta-file writes
+    // and the same sweep for `meta/.append-*` staging dirs of crashed
+    // meta-file writes, and for quarantine files of epochs no retained
+    // snapshot ledgers (attempts that never published, epochs a rollback
+    // undid). Only the engine's own `e<epoch>.json` names are candidates:
+    // an older engine's quarantine appends hold the only copy of their
+    // rows and nothing ledgers them.
     def sweep(dir: String)(orphan: String => Boolean): Seq[String] = {
       val p = new org.apache.hadoop.fs.Path(s"${table.root}/$dir")
       val fs = p.getFileSystem(table.spark.sparkContext.hadoopConfiguration)
       if (!fs.exists(p)) Seq.empty
       else fs.listStatus(p).toSeq
-        .filter(st => orphan(st.getPath.getName) && st.getModificationTime <= cutoff)
+        .filter(st => st.getModificationTime <= cutoff && orphan(st.getPath.getName))
         .map { st => fs.delete(st.getPath, true); s"$dir/${st.getPath.getName}" }
     }
+    lazy val ledgered: Set[Long] = lineages.iterator.flatMap(t =>
+      t.snapshotVersions().iterator.flatMap(v => t.snapshotAt(v).epochs)).toSet
     orphans ++ orphanManifests ++ sweep("_dml")(_ => true) ++
-      sweep("meta/quarantine")(n => !refQuarantine(n)) ++
+      sweep("meta/quarantine")(graft.merge.Meta.quarantineEpoch(_).exists(!ledgered(_))) ++
       sweep("meta")(_.startsWith(".append-"))
   }
 
@@ -418,9 +420,10 @@ object Maintenance {
     * A version's commit summary lives in its snapshot, so it expires
     * with it (as Delta's DESCRIBE HISTORY follows log retention):
     * `history` and `Meta.metrics`/`Meta.lineage` then no longer show it.
-    * Quarantine references are carried forward by every later commit,
-    * so the rows stay; a file only expired versions reference (an epoch
-    * a rollback undid) is left for `vacuum`.
+    * Quarantine files are referenced through the epoch ledger, which
+    * every later commit carries forward, so the rows stay; the file of an
+    * epoch only expired versions ledger (one a rollback undid) is left
+    * for `vacuum`.
     * Returns the removed artifacts. */
   def expireSnapshots(table: LakeTable, keepLast: Int = 2,
                       olderThanMs: Long = 7L * 24 * 3600 * 1000): Seq[String] = {

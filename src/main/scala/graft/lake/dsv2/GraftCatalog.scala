@@ -286,8 +286,7 @@ class GraftCatalog extends CatalogPlugin with ProcedureCatalog with TableCatalog
           epochs = snap.epochs,
           filesRef = t.successorFiles(snap, Set.empty, Seq.empty),
           highWaterLsn = snap.highWaterLsn,
-          unorderedCommits = snap.unorderedCommits,
-          quarantine = snap.quarantine), CommitSummary("alter"))
+          unorderedCommits = snap.unorderedCommits), CommitSummary("alter"))
         return loadTable(ident)
       } catch {
         // a concurrent writer landed this version: rebase on the fresh
@@ -450,7 +449,7 @@ private final class GraftProcedure(procName: String)
     case "drop_branch" => Array(in("path", StringType), in("name", StringType))
     case "list_branches" => Array(in("path", StringType))
     case "replay_quarantine" => Array(in("path", StringType),
-      inDefault("source", StringType, "''")) // '' = the current snapshot's quarantine files
+      inDefault("source", StringType, "''")) // '' = the current ledger's quarantine files
     case "refresh_enriched_view" => Array(in("path", StringType),
       in("view_path", StringType),
       inDefault("dim_path", StringType, "''"), // '' = no dimension join
@@ -511,7 +510,7 @@ private final class GraftProcedure(procName: String)
       // retention policy, and readers needing only the current version
       // never pay it.
       val t = table
-      val counters = Seq("events_in", "events_quarantined", "keys_written", "tombstones_written")
+      val counters = CommitSummary.MergeCounters
       val schema = StructType(Seq(
         StructField("version", LongType), StructField("committed_at_ms", LongType),
         StructField("num_buckets", IntegerType), StructField("files", IntegerType),
@@ -704,9 +703,11 @@ private final class GraftProcedure(procName: String)
         // forced duplicate replay converges (the lsn argmax is
         // idempotent over identical events). Rows still malformed after
         // "repair" simply re-quarantine. The original quarantine rows
-        // are kept as an audit record. The default source is the files the
-        // current snapshot references, never a raw listing, which would
-        // also pick up the files of attempts that did not publish.
+        // are kept as an audit record. The default source is the files of
+        // the epochs in the current ledger (`Meta.quarantineFiles`), never
+        // the whole directory, which also holds the files of attempts that
+        // did not publish; an older engine's quarantine files are replayed
+        // by naming them as the `source`.
         val t = table
         val srcOpt = input.getString(1)
         val cur = t.currentSnapshot().getOrElse(
@@ -716,8 +717,7 @@ private final class GraftProcedure(procName: String)
         val srcPath = new org.apache.hadoop.fs.Path(src)
         val srcFs = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
         val srcFiles =
-          if (byDefault) cur.quarantine.map(n => srcFs.getFileStatus(
-            new org.apache.hadoop.fs.Path(srcPath, n))).toArray
+          if (byDefault) graft.merge.Meta.quarantineFiles(t).toArray
           else if (!srcFs.exists(srcPath)) Array.empty[org.apache.hadoop.fs.FileStatus]
           else srcFs.listStatus(srcPath).filter(_.isFile)
         if (srcFiles.isEmpty) {

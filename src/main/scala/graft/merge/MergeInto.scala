@@ -1,6 +1,7 @@
 package graft.merge
 
 import graft.lake.{CommitSummary, InlineFiles, LakeTable, Snapshot}
+import org.apache.hadoop.fs.{FileStatus, Path}
 import graft.schema.SchemaRegistry
 import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
@@ -24,9 +25,9 @@ import org.apache.spark.sql.types._
   *   5. publish a new snapshot atomically; the epoch ledger makes
   *      re-delivery of a committed epoch a no-op (exactly-once). The
   *      snapshot also carries the epoch's [[CommitSummary]] (counters,
-  *      phase times) and the reference to its quarantined rows, so what
-  *      the epoch did becomes visible with its data and no Spark job runs
-  *      after the data write.
+  *      phase times), and its ledger entry is what makes the epoch's
+  *      quarantined rows visible, so what the epoch did becomes visible
+  *      with its data and no Spark job runs after the data write.
   *
   * Scale notes (100 TB / 1000 executors):
   *   - The only wide exchange is the per-key argmax, a partial-agg-friendly
@@ -62,10 +63,10 @@ final case class MergeStats(
       * let one poison event abort the stream (a null repo would otherwise
       * land in an unparseable `b=__HIVE_DEFAULT_PARTITION__` directory and
       * fail the commit); they are counted here and in the commit's
-      * summary, and — when `recordMeta` — written to one JSONL file under
-      * `meta/quarantine/` (schema-tolerant across evolving event schemas)
-      * that the published snapshot references, for replay after upstream
-      * repair ([[Meta.quarantine]]). */
+      * summary, and — when `recordMeta` — written before the publish to
+      * `meta/quarantine/e<epoch>.json` (JSONL: schema-tolerant across
+      * evolving event schemas), which counts once the epoch is in the
+      * ledger, for replay after upstream repair ([[Meta.quarantine]]). */
     eventsQuarantined: Long,
     /** HLL estimate (~2% rsd) of distinct lsns in the batch — an
       * observability metric, NOT an exact duplicate-delivery count;
@@ -81,7 +82,12 @@ final case class MergeStats(
       * not run is absent. The snapshot's summary holds the same map
       * without `commit`, which ends after the summary is written. */
     phaseMs: Map[String, Long] = Map.empty
-)
+) {
+  /** The counters as a commit summary records them. */
+  def counters: Map[String, Long] = CommitSummary.MergeCounters.zip(Seq(eventsIn,
+    eventsQuarantined, approxDistinctLsn, keysWritten, tombstonesWritten,
+    bucketsTouched.toLong, durationMs)).toMap
+}
 
 /** `recordMeta` gates only the quarantine FILE (poison rows kept for
   * replay); the commit summary is always written. */
@@ -343,20 +349,19 @@ final class MergeInto(
         if (snapOpt.isEmpty) asLong(outObs.get, "n_buckets").toInt else touched.size,
       durationMs = 0L)
 
-    // Quarantined rows are written BEFORE the publish, as one JSONL file
-    // (schema-tolerant across evolving event schemas; replay after
-    // upstream repair is `Meta.quarantine` → merge.apply) that the
-    // snapshot references: they commit with the epoch or not at all. A
-    // lost race or a crash before the publish leaves the file
-    // unreferenced for `Maintenance.vacuum`; a metadata-only rebase below
-    // reuses it, a full recompute writes its own. repartition, NOT
-    // coalesce: `aligned` is uncached, and coalesce(1) would fold its
-    // whole source re-parse into one task.
-    val quarantineFile = if (nQuarantined == 0L || !recordMeta) None else phase("quarantine") {
-      val name = s"e$epochId-${java.util.UUID.randomUUID().toString.take(12)}.json"
+    // Quarantined rows are written BEFORE the publish, as the epoch's one
+    // JSONL file (schema-tolerant across evolving event schemas; replay
+    // after upstream repair is `Meta.quarantine` → merge.apply). Readers
+    // take it only once the epoch is in the ledger, so the rows commit
+    // with the epoch or not at all, and the root stays O(1). Every attempt
+    // of an epoch quarantines the same rows under the same name: a retry
+    // replaces the file, and an attempt that never publishes leaves it
+    // for `Maintenance.vacuum`. repartition, NOT coalesce: `aligned` is
+    // uncached, and coalesce(1) would fold its whole source re-parse into
+    // one task.
+    if (nQuarantined > 0L && recordMeta) phase("quarantine") {
       table.writeMetaFile(aligned.where(badCond).withColumn("_epoch", lit(epochId))
-        .repartition(1), "json", "quarantine", name)
-      Some(name)
+        .repartition(1), "json", "quarantine", Meta.quarantineName(epochId))
     }
 
     // --- commit -----------------------------------------------------------
@@ -432,16 +437,9 @@ final class MergeInto(
           filesRef = filesRef,
           highWaterLsn = newHighWater,
           unorderedCommits = base.map(_.unorderedCommits).getOrElse(0L) +
-            (if (unordered) 1L else 0L),
-          quarantine = base.map(_.quarantine).getOrElse(Nil) ++ quarantineFile
-        ), CommitSummary("merge", Some(epochId), Map(
-          "events_in" -> stats.eventsIn,
-          "events_quarantined" -> stats.eventsQuarantined,
-          "approx_distinct_lsn" -> stats.approxDistinctLsn,
-          "keys_written" -> stats.keysWritten,
-          "tombstones_written" -> stats.tombstonesWritten,
-          "buckets_touched" -> stats.bucketsTouched.toLong,
-          "duration_ms" -> durationMs), phases.toMap, Some(writeDir)))
+            (if (unordered) 1L else 0L)
+        ), CommitSummary("merge", Some(epochId), stats.copy(durationMs = durationMs).counters,
+          phases.toMap, Some(writeDir)))
         committedVersion = commitVersion
       } catch {
         case e: graft.lake.CommitConflictException =>
@@ -473,26 +471,27 @@ final class MergeInto(
   * engine's observability surface (reference analogue: atomic counters
   * and cache statistics, src/atp/mod.rs:67-72,
   * src/places/place_index.rs:27-45). Each is read back from the
-  * snapshots' own [[CommitSummary]] and quarantine references, so it is
-  * exactly as durable as the commits: one row per RETAINED merge version
-  * of this handle's lineage (a summary expires with its snapshot).
+  * snapshots' own [[CommitSummary]] and epoch ledger, so it is exactly as
+  * durable as the commits: one row per RETAINED merge version of this
+  * handle's lineage (a summary expires with its snapshot).
   */
 object Meta {
   private def merges(table: LakeTable): Seq[(Snapshot, CommitSummary)] =
     table.snapshotVersions().map(table.snapshotAt).flatMap(s =>
       s.summary.filter(_.operation == "merge").map(s -> _))
 
-  /** epoch, version, then the merge counters (`buckets_touched` an int). */
+  /** epoch, version, then [[CommitSummary.MergeCounters]]. */
   def metrics(table: LakeTable): DataFrame = {
-    val spark = table.spark
-    import spark.implicits._
-    merges(table).map { case (s, c) =>
-      val n = c.counters.withDefaultValue(0L)
-      (c.epoch.getOrElse(-1L), s.version, n("events_in"), n("events_quarantined"),
-        n("approx_distinct_lsn"), n("keys_written"), n("tombstones_written"),
-        n("buckets_touched").toInt, n("duration_ms"))
-    }.toDF("epoch", "version", "events_in", "events_quarantined", "approx_distinct_lsn",
-      "keys_written", "tombstones_written", "buckets_touched", "duration_ms")
+    val counterCols = CommitSummary.MergeCounters.map(k =>
+      StructField(k, if (k == "buckets_touched") IntegerType else LongType))
+    val rows = merges(table).map { case (s, c) =>
+      Row.fromSeq(Seq(c.epoch.getOrElse(-1L), s.version) ++ counterCols.map { f =>
+        val n = c.counters.getOrElse(f.name, 0L)
+        if (f.dataType == IntegerType) n.toInt else n
+      })
+    }
+    table.spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(
+      StructField("epoch", LongType) +: StructField("version", LongType) +: counterCols))
   }
 
   /** Per bucket a merge version wrote: key count and lsn range, rolled up
@@ -511,12 +510,34 @@ object Meta {
     }.toDF("bucket", "n_keys", "min_lsn", "max_lsn", "version", "epoch")
   }
 
+  /** An epoch's quarantine file under `meta/quarantine/`. It counts while
+    * the epoch is in a ledger: the file is written before the publish,
+    * and a rollback that un-ledgers the epoch drops it from view. */
+  private[graft] def quarantineName(epoch: Long): String = s"e$epoch.json"
+  private val QuarantineFile = """e(-?\d+)\.json""".r
+  /** The epoch a quarantine file name belongs to; None for names this
+    * engine does not write (an older engine's `a-<id>-<i>.json` appends,
+    * which default reads skip and `vacuum` never removes). */
+  private[graft] def quarantineEpoch(name: String): Option[Long] = name match {
+    case QuarantineFile(e) => Some(e.toLong)
+    case _ => None
+  }
+
+  /** The quarantine files of the epochs in the current ledger. */
+  private[graft] def quarantineFiles(table: LakeTable): Seq[FileStatus] = {
+    val ledger = table.currentSnapshot().map(_.epochs).getOrElse(Set.empty[Long])
+    val dir = new Path(table.root, "meta/quarantine")
+    val fs = dir.getFileSystem(table.spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq.filter(st => quarantineEpoch(st.getPath.getName).exists(ledger))
+  }
+
   /** The quarantined rows of every epoch in the current ledger (JSONL,
     * the event columns plus `_epoch`); no rows when nothing was. */
   def quarantine(table: LakeTable): DataFrame = {
-    val files = table.currentSnapshot().map(_.quarantine).getOrElse(Nil)
+    val files = quarantineFiles(table)
     if (files.isEmpty) table.spark.createDataFrame(
       java.util.Collections.emptyList[Row](), StructType(Seq(StructField("_epoch", LongType))))
-    else table.spark.read.json(files.map(n => s"${table.root}/meta/quarantine/$n"): _*)
+    else table.spark.read.json(files.map(_.getPath.toString): _*)
   }
 }

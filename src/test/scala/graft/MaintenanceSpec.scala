@@ -269,8 +269,9 @@ class MaintenanceSpec extends AnyFunSuite {
     val v = table.currentSnapshot().get.version
     val epoch = 1L // the epoch that produced version v
     val stateBefore = table.read().orderBy("repo", "path").collect().map(_.toString).toSeq
-    val deadAttempt = table.currentSnapshot().get.quarantine
-    assert(deadAttempt.size == 1)
+    val qFile = s"meta/quarantine/${graft.merge.Meta.quarantineName(epoch)}"
+    assert(graft.merge.Meta.quarantineFiles(table).map(_.getPath.getName) ==
+      Seq(graft.merge.Meta.quarantineName(epoch)))
     spark.conf.set("spark.sql.catalog.graft_crash", classOf[graft.lake.dsv2.GraftCatalog].getName)
     def historyEpochs() = spark.sql(s"CALL graft_crash.system.history('${table.root}')")
       .where(col("epoch") === epoch).count()
@@ -280,21 +281,29 @@ class MaintenanceSpec extends AnyFunSuite {
     // simulate the crash: delete the LAST snapshot file, keep everything else
     val fs = new org.apache.hadoop.fs.Path(table.root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.delete(new org.apache.hadoop.fs.Path(s"${table.root}/_snapshots/v$v"), false))
-    assert(table.currentSnapshot().get.version == v - 1)
-    assert(shown() == (0L, 0L, 0L), "an unpublished epoch is visible")
-
+    def crash(): Unit = {
+      assert(fs.delete(new org.apache.hadoop.fs.Path(s"${table.root}/_snapshots/v$v"), false))
+      assert(table.currentSnapshot().get.version == v - 1)
+      assert(shown() == (0L, 0L, 0L), "an unpublished epoch is visible")
+    }
     // retry: the ledger skips epoch 0 and re-applies epoch 1
-    replay()
-    assert(table.currentSnapshot().get.version == v)
-    val stateAfter = table.read().orderBy("repo", "path").collect().map(_.toString).toSeq
-    assert(stateAfter == stateBefore)
-    assert(shown() == (2L, 1L, 1L), "the retried epoch must land exactly once")
-
-    // the dead attempt's quarantine file is unreferenced: vacuum reclaims it
-    val removed = Maintenance.vacuum(table, retentionMs = 0L)
-    assert(removed.contains(s"meta/quarantine/${deadAttempt.head}"))
-    assert(spark.read.json(s"${table.root}/meta/quarantine").count() == 2L)
+    def retry(): Unit = {
+      replay()
+      assert(table.currentSnapshot().get.version == v)
+      val stateAfter = table.read().orderBy("repo", "path").collect().map(_.toString).toSeq
+      assert(stateAfter == stateBefore)
+      assert(shown() == (2L, 1L, 1L), "the retried epoch must land exactly once")
+      assert(spark.read.json(s"${table.root}/meta/quarantine").count() == 2L)
+    }
+    // the retry replaces the dead attempt's quarantine file
+    crash()
+    retry()
+    // ... or, once vacuum has reclaimed the unreferenced file, writes it anew
+    crash()
+    assert(Maintenance.vacuum(table, retentionMs = 0L).contains(qFile))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"${table.root}/$qFile")))
+    retry()
+    assert(!Maintenance.vacuum(table, retentionMs = 0L).contains(qFile))
     assert(graft.merge.Meta.quarantine(table).count() == 2L)
   }
   test("compact rejects a non-positive byte budget before doing any work") {
@@ -363,8 +372,8 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(Maintenance.compact(table, maxFilesPerBucket = 1) > 0)
     Maintenance.rebucket(table, 3): Unit
     spark.sql("ALTER TABLE graft_carry.db.t ADD COLUMN license STRING")
-    val qFiles = table.currentSnapshot().get.quarantine
-    assert(qFiles.size == 1, "the quarantine reference must survive every non-merge commit")
+    val qFiles = graft.merge.Meta.quarantineFiles(table).map(_.getPath.getName)
+    assert(qFiles == Seq("e1.json"), "the ledger must carry the quarantine file across every commit")
 
     def history() = spark.sql(s"CALL graft_carry.system.history('${table.root}')").collect()
     val ops = history().map(r => r.getAs[String]("operation")).toSeq
@@ -379,7 +388,17 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(m.where(col("epoch") === 1L).select("events_quarantined").as[Long].head() == 2L)
 
     assert(Maintenance.expireSnapshots(table, keepLast = 1, olderThanMs = 0L).nonEmpty)
-    Maintenance.vacuum(table, retentionMs = 0L): Unit
+    // a quarantine append as an earlier engine named it, its row since
+    // repaired upstream: no ledger references it and it holds the only
+    // copy of its row, so vacuum leaves it and default reads skip it
+    val legacy = new org.apache.hadoop.fs.Path(s"${table.root}/meta/quarantine/a-0123456789ab-0.json")
+    val fs = legacy.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(legacy, false)
+    try out.write(("""{"lsn":5,"op":"I","ts":"2024-03-01 00:00:00","repo":"r/legacy",""" +
+      """"path":"g","commit":"c","lang":"t","content":"y","_epoch":7}""" + "\n").getBytes("UTF-8"))
+    finally out.close()
+    assert(!Maintenance.vacuum(table, retentionMs = 0L).exists(_.startsWith("meta/quarantine")))
+    assert(fs.exists(legacy))
     // summaries expire with their snapshots; the quarantine rows do not
     assert(history().map(_.getAs[String]("operation")).toSeq == Seq("alter"))
     assert(graft.merge.Meta.metrics(table).count() == 0L)
@@ -388,7 +407,12 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(spark.read.json(s"${table.root}/meta/quarantine/${qFiles.head}").count() == 2L)
     val r = spark.sql(s"CALL graft_carry.system.replay_quarantine('${table.root}')").head()
     assert(r.getLong(1) == 2L && r.getLong(2) == 2L, s"still-poison rows replay and re-quarantine: $r")
-    assert(table.currentSnapshot().get.quarantine.size == 2)
+    assert(graft.merge.Meta.quarantineFiles(table).size == 2)
+    // the legacy file replays by naming it as the source
+    val lr = spark.sql(
+      s"CALL graft_carry.system.replay_quarantine('${table.root}', '$legacy')").head()
+    assert(lr.getLong(1) == 1L && lr.getLong(2) == 0L, s"legacy replay: $lr")
+    assert(table.read().where(col("repo") === "r/legacy").count() == 1L)
   }
 
   test("concurrent snapshot commit of the same version is rejected") {
