@@ -83,10 +83,6 @@ object BenchCdc {
     def warmLogDir = s"$work/warmlog"
   }
 
-  /** The env-derived bench config, for the phase-decomposition probe
-    * (tools.ReplayProbe) — same knobs, same log. */
-  private[graft] def probeCfg: Cfg = cfgFromEnv
-
   private def cfgFromEnv = cfgForBatches(envInt("SPARK_GRAFT_BENCH_BATCHES", 1))
 
   private def cfgForBatches(rawBatches: Int): Cfg = {

@@ -751,11 +751,14 @@ private final class GraftProcedure(procName: String)
         val seed = s"replay-quarantine:$src:$finger"
           .getBytes(java.nio.charset.StandardCharsets.UTF_8)
         val epoch = graft.functions.Hashing.hashBytes(seed, 0, seed.length, 0x9A7AL)
-        // recordMeta: still-poison rows must RE-PERSIST as the new
-        // epoch's quarantine file (not just count) — the procedure's
-        // contract says they re-quarantine
+        // still-poison rows re-quarantine: a named source's rows persist
+        // as the new epoch's quarantine file; the default source's rows
+        // are counted only, since the files they came from are already
+        // quarantine files of the ledger. Writing them again would add a
+        // file, change the next call's fingerprint and so double them on
+        // every call; without it a repeat call is a ledger skip.
         val stats = new graft.merge.MergeInto(t, numBuckets = cur.numBuckets,
-          saltBuckets = 2, recordMeta = true).apply(events, epoch)
+          saltBuckets = 2, recordMeta = !byDefault).apply(events, epoch)
         (StructType(Seq(
           StructField("version", LongType),
           StructField("events_in", LongType),

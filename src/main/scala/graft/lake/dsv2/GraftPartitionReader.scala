@@ -6,7 +6,9 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.api.ReadSupport
+import org.apache.parquet.conf.HadoopParquetConfiguration
 import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{MessageType, PrimitiveType}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -141,8 +143,14 @@ final class GraftPartitionReader(absPath: String, physicalSchema: StructType,
     conf.set(ReadSupport.PARQUET_READ_SCHEMA, projection.toString)
     // byte-range split: only row groups whose midpoint falls in the
     // partition's range are read (0..MaxValue = the whole file)
-    val b = ParquetReader.builder(new GroupReadSupport(), path).withConf(conf)
-      .withFileRange(rangeStart, rangeEnd)
+    // built on this reader's own conf: `ParquetReader.builder(support,
+    // path)` would first build a default Configuration (a re-read of
+    // Hadoop's default XML through the class loader) that `withConf` then
+    // throws away
+    val b = new ParquetReader.Builder[Group](HadoopInputFile.fromPath(path, conf),
+        new HadoopParquetConfiguration(conf)) {
+      override protected def getReadSupport(): ReadSupport[Group] = new GroupReadSupport()
+    }.withFileRange(rangeStart, rangeEnd)
     // push the lsn bound and key equalities into parquet (row-group stats
     // + dictionary + record skipping); only when the file HAS the column —
     // a filter on an absent column evaluates against all-null and would
@@ -272,8 +280,10 @@ object GraftPartitionReader {
       val hit = schemaCache.get(key)
       if (hit != null) return hit
     }
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    // read options from `conf`: `open(in)` alone builds a default
+    // Configuration for them
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(HadoopInputFile.fromPath(path, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf, path).build())
     val s = try r.getFooter.getFileMetaData.getSchema finally r.close()
     schemaCache.synchronized { schemaCache.put(key, s): Unit }
     s

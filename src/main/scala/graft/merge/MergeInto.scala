@@ -33,19 +33,27 @@ import org.apache.spark.sql.types._
   *   - The only wide exchange is the per-key argmax, a partial-agg-friendly
   *     hash aggregate on fine-grained (repo, path) keys — no single key is
   *     hot, so the aggregate itself cannot skew.
-  *   - Hot-REPO skew shows up as hot BUCKETS (file-size and task skew),
-  *     handled by salting the write repartition with
-  *     `pmod(xxhash64(path), saltBuckets)` so a hot bucket fans out over
-  *     many tasks/files, plus AQE skew splitting.
-  *   - The reduce stage runs one task per (bucket, salt) group, capped at
-  *     `max(spark.sql.shuffle.partitions, input bytes / advisory
-  *     partition size)`: a small epoch runs no more tasks than the
-  *     session's shuffle parallelism, a large one still gets a task per
-  *     ~advisory size of input. Past the cap a task holds several groups
-  *     and writes one file per bucket among them. The cap keeps a small
-  *     epoch cheap: touched × salt groups hash unevenly onto as many
-  *     partitions, leaving about a third of the tasks empty, and every
-  *     task costs its deserialisation.
+  *   - The driver plans the reduce stage instead of hashing rows onto it
+  *     ([[MergeInto.planTasks]]). Each touched bucket's load is its target
+  *     rows (the manifest's per-file `nKeys`) plus its source rows (the
+  *     touched scan counts them per bucket, in the same one job that finds
+  *     the buckets). A bucket stays whole, one task and one file, unless
+  *     its load is over one task's share; then it is split by
+  *     `pmod(xxhash64(path), k)`, k ≤ `saltBuckets`. Whole buckets and
+  *     parts are packed largest-first onto the least-loaded task, so the
+  *     tasks finish together and an epoch writes one file per touched
+  *     bucket plus one per extra part. Rows reach their task through
+  *     `repartitionById` on a literal over the touched buckets only.
+  *   - Hot-REPO skew shows up as a hot BUCKET, whose load then exceeds a
+  *     share and is split over up to `saltBuckets` tasks/files. A fresh
+  *     table has no loads (no touched scan runs): every bucket is split
+  *     `saltBuckets` ways and the parts are dealt round-robin, so a
+  *     backfill fans every bucket out as before.
+  *   - The stage runs at most `max(spark.sql.shuffle.partitions, input
+  *     bytes / advisory partition size)` tasks and no more than there are
+  *     parts: a small epoch runs no more tasks than the session's shuffle
+  *     parallelism, a large one still gets a task per ~advisory size of
+  *     input, and no task is left empty.
   *   - Untouched buckets are never read or rewritten, so steady-state cost
   *     tracks change volume, not table size.
   *   - The target is planned from the manifest (paths and lengths, no
@@ -89,7 +97,8 @@ final case class MergeStats(
     bucketsTouched.toLong, durationMs)).toMap
 }
 
-/** `recordMeta` gates only the quarantine FILE (poison rows kept for
+/** `saltBuckets` is the most tasks (and files) one bucket may be split
+  * over. `recordMeta` gates only the quarantine FILE (poison rows kept for
   * replay); the commit summary is always written. */
 final class MergeInto(
     table: LakeTable,
@@ -100,7 +109,7 @@ final class MergeInto(
   import LakeTable.DeletedCol
 
   private val BucketCol = "b"
-  private val SaltCol = "_salt"
+  private val TaskCol = "_task"
 
   private def bucketExpr = pmod(xxhash64(col("repo")), lit(numBuckets)).cast(IntegerType)
 
@@ -115,18 +124,16 @@ final class MergeInto(
     }.toIndexedSeq: _*)
   }
 
-  /** Width of the merge's reduce stage: one task per (bucket, salt) group,
-    * but no more than the session's shuffle parallelism, unless the
-    * input's estimated size (the planner's, from file lengths) needs more
-    * tasks of the advisory partition size. An input of unknown size
-    * keeps one task per group. */
-  private def reduceTasks(input: DataFrame, touched: Int): Int = {
+  /** The most tasks the merge's reduce stage may run: the session's
+    * shuffle parallelism, unless the input's estimated size (the
+    * planner's, from file lengths) needs more tasks of the advisory
+    * partition size. */
+  private def reduceTasks(input: DataFrame): Int = {
     val conf = input.sparkSession.conf
     val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
     val bySize = input.queryExecution.optimizedPlan.stats.sizeInBytes / advisory + 1
-    bySize.max(conf.get("spark.sql.shuffle.partitions").toInt)
-      .min(touched * saltBuckets).max(1).toInt
+    bySize.max(conf.get("spark.sql.shuffle.partitions").toInt).min(Int.MaxValue).toInt
   }
 
   private def asLong(m: Map[String, Any], k: String): Long = m.get(k) match {
@@ -230,10 +237,11 @@ final class MergeInto(
       .where(!badCond)
 
     // --- bucket pruning -------------------------------------------------
-    // Touched buckets: tiny distinct over the batch (≤ numBuckets values).
-    // Dedup cannot change the bucket set (a dropped duplicate shares its
-    // lsn/repo with a survivor), so this reads the raw source — one cheap
-    // scan-only job, no cache materialization.
+    // Touched buckets and their source rows: a tiny per-bucket count over
+    // the batch (≤ numBuckets groups). Dedup cannot change the bucket set
+    // (a dropped duplicate shares its lsn/repo with a survivor), so this
+    // reads the raw source — one cheap scan-only job, no cache
+    // materialization; the counts size the reduce plan below.
     // FRESH-TABLE fast path: with no snapshot there are no target files
     // to prune and no rebase that could consult the set, so the scan job
     // is pure overhead — skipping it saves a backfill epoch (the dominant
@@ -241,11 +249,13 @@ final class MergeInto(
     // The write's dynamic partitioning still creates only the buckets
     // that exist; stats take the bucket count from the output
     // observation instead (below).
-    val touched: Set[Int] = snapOpt match {
-      case None => (0 until numBuckets).toSet
-      case Some(_) => phase("touched_scan")(source.select(bucketExpr.as(BucketCol))
-        .distinct().collect().map(_.getInt(0)).toSet)
+    val sourceRows: Map[Int, Long] = snapOpt match {
+      case None => Map.empty
+      case Some(_) => phase("touched_scan")(source.groupBy(bucketExpr.as(BucketCol)).count()
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap)
     }
+    val touched: Set[Int] =
+      if (snapOpt.isEmpty) (0 until numBuckets).toSet else sourceRows.keySet
 
     val targetFiles = snapOpt.map(_.filesIn(touched)).getOrElse(Seq.empty)
     val target = phase("target_plan")(align(
@@ -254,21 +264,33 @@ final class MergeInto(
       evolvedWithOp))
 
     // --- merge: per-key argmax by lsn, single exchange --------------------
-    // ONE shuffle serves both the merge and the file layout: we
-    // repartition explicitly on (bucket, salt) — bucket = f(repo),
-    // salt = g(path) — then take the lsn-argmax per key with a window
-    // over (bucket, salt, repo, path). Since the partitioning
-    // expressions are a subset of the window partition spec,
-    // EnsureRequirements recognizes the distribution as satisfied and
-    // plans the window WITHOUT a second exchange; each reducer task
-    // sorts its partition once and writes exactly its own bucket files.
-    // (Partitioning by the two derived columns doesn't change the
-    // argmax: (repo, path) determines both.) The window+sort form beats
+    // ONE shuffle serves both the merge and the file layout: each row is
+    // sent to the reduce task the driver planned for its part of its
+    // bucket (`planTasks`: bucket = f(repo), part = g(path)), then the
+    // lsn-argmax per key is a window over (bucket, task, repo, path).
+    // The pass-through partitioning on the task column satisfies the
+    // window's distribution, so EnsureRequirements plans the window
+    // WITHOUT a second exchange; each reducer task sorts its partition
+    // once, bucket first, and the writer adds no sort of its own. (The
+    // two derived columns don't change the argmax: (repo, path)
+    // determines both.) The window+sort form beats
     // `groupBy.agg(max_by(struct(...)))` ~2× here: a struct-valued
     // aggregation buffer forces the slow aggregate path, while the sort
-    // runs on flat UnsafeRows. The salt dimension keeps a hot repo's
-    // bucket spread over `saltBuckets` tasks/files.
-    val saltExpr = pmod(xxhash64(col("path")), lit(saltBuckets)).cast(IntegerType)
+    // runs on flat UnsafeRows.
+    // A bucket's load is its target rows (the manifest's `nKeys`) plus
+    // its source rows (the touched scan's counts); a bucket with a file
+    // of unknown row count, and every bucket of a fresh table, counts
+    // as unknown.
+    val loads: Map[Int, Long] =
+      if (snapOpt.isEmpty) touched.map(_ -> -1L).toMap
+      else {
+        val targetRows = targetFiles.groupBy(_.bucket).map { case (b, fs) =>
+          b -> (if (fs.forall(_.hasStats)) fs.map(_.nKeys).sum else -1L)
+        }
+        sourceRows.map { case (b, n) =>
+          b -> targetRows.get(b).fold(n)(t => if (t < 0L) -1L else t + n)
+        }
+      }
     val outObs = Observation(s"merge-out-$epochId")
     // Tie-break equal lsns toward the TARGET copy (an at-least-once
     // redelivery ties with the identical already-applied row): the
@@ -281,7 +303,7 @@ final class MergeInto(
     val SrcCol = "_src"
     val prevHw = snapOpt.flatMap(_.highWaterLsn)
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(BucketCol), col(SaltCol), col("repo"), col("path"))
+      .partitionBy(col(BucketCol), col(TaskCol), col("repo"), col("path"))
       .orderBy(col("lsn").desc, col(SrcCol).asc)
     // SOURCE on the union's left: the combined Dataset (and therefore
     // every action on it, including the write command below) binds to
@@ -298,10 +320,15 @@ final class MergeInto(
     // identical payloads.
     val both = source.withColumn(SrcCol, lit(true))
       .unionByName(target.withColumn(SrcCol, lit(false)))
+    val plan = MergeInto.planTasks(loads, reduceTasks(both), saltBuckets)
+    // a bucket's tasks, indexed by its part; the literal names only the
+    // touched buckets
+    val tasksOf = element_at(typedLit(plan.map { case (b, ts) => b -> ts.toSeq }), col(BucketCol))
     val result = both
       .withColumn(BucketCol, bucketExpr)
-      .withColumn(SaltCol, saltExpr)
-      .repartition(reduceTasks(both, touched.size), col(BucketCol), col(SaltCol))
+      .withColumn(TaskCol, element_at(tasksOf,
+        pmod(xxhash64(col("path")), size(tasksOf)).cast(IntegerType) + 1))
+      .repartitionById(plan.valuesIterator.flatten.maxOption.fold(1)(_ + 1), col(TaskCol))
       .withColumn("_rn", row_number().over(w))
       .where(col("_rn") === 1)
       .select((col(SrcCol) +: col(BucketCol) +:
@@ -464,6 +491,40 @@ final class MergeInto(
     phases("commit") = (System.nanoTime() - commitStart) / 1000000
     skippedStats.getOrElse(stats.copy(tableVersion = committedVersion,
       durationMs = (System.nanoTime() - t0) / 1000000, phaseMs = phases.toMap))
+  }
+}
+
+object MergeInto {
+  /** The merge's reduce plan: for each touched bucket, the tasks that hold
+    * its parts, indexed by part. A bucket of one part is written whole,
+    * as one file; one of k parts is split by `pmod(xxhash64(path), k)`.
+    *
+    * `loads` is each touched bucket's expected row count, -1 when
+    * unknown. A known load over one task's share (the total over
+    * `maxTasks`) is split into as many shares as it holds, at most
+    * `maxWays`; an unknown load is split `maxWays` ways, each part
+    * weighing a share. The stage runs min(maxTasks, parts) tasks, and the
+    * parts are packed largest-first onto the least-loaded task (Graham's
+    * LPT rule, within 4/3 of the best makespan); equal weights, as on a
+    * fresh table, deal the parts round-robin. */
+  private[graft] def planTasks(loads: Map[Int, Long], maxTasks: Int,
+                               maxWays: Int): Map[Int, IndexedSeq[Int]] = {
+    val share = math.max(1.0, loads.values.filter(_ >= 0L).sum.toDouble / maxTasks)
+    val parts = loads.toSeq.sortBy(_._1).flatMap { case (b, load) =>
+      val ways = if (load < 0L) maxWays else math.ceil(load / share).toInt.max(1).min(maxWays)
+      val weight = if (load < 0L) share else load.toDouble / ways
+      (0 until ways).map(i => (b, i, weight))
+    }
+    // (assigned weight, task): the least-loaded task first, the lowest on ties
+    val free = scala.collection.mutable.PriorityQueue.empty(Ordering[(Double, Int)].reverse)
+    (0 until math.min(maxTasks, parts.size)).foreach(t => free.enqueue((0.0, t)))
+    parts.sortBy(-_._3) // stable: equal weights keep bucket order
+      .map { case (b, i, w) =>
+        val (l, t) = free.dequeue()
+        free.enqueue((l + w, t))
+        (b, i, t)
+      }
+      .groupBy(_._1).map { case (b, ps) => b -> ps.sortBy(_._2).map(_._3).toIndexedSeq }
   }
 }
 

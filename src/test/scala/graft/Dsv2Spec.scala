@@ -18,8 +18,10 @@ class Dsv2Spec extends AnyFunSuite {
     val work = TestSpark.tmpDir("dsv2")
     ChangeGen.writeLog(spark, cfg, s"$work/log", nBatches = 2, partitions = 2)
     val table = new LakeTable(spark, s"$work/table")
-    BatchReplay.replay(spark, s"$work/log", table, numBuckets = 4, saltBuckets = 2,
-      recordMeta = false)
+    // each of the 4 buckets holds over one of 8 tasks' share of an epoch,
+    // so every epoch writes each bucket as 2 files: compaction has work
+    TestSpark.withShufflePartitions(8)(BatchReplay.replay(spark, s"$work/log", table,
+      numBuckets = 4, saltBuckets = 2, recordMeta = false))
     table
   }
 

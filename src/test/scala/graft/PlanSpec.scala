@@ -38,31 +38,64 @@ class PlanSpec extends AnyFunSuite {
   private def countNodes(p: SparkPlan, pred: SparkPlan => Boolean): Int =
     collectAll(p).count(pred)
 
+  /** Every node of a plan, descending into AQE query stages and reused
+    * exchanges as well as children and subqueries. */
+  private def deep(p: SparkPlan): Seq[SparkPlan] = {
+    val inner = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => Seq(q.plan)
+      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => Seq(r.child)
+      case _ => Seq.empty
+    }
+    p +: (p.children ++ inner ++ p.subqueries).flatMap(deep)
+  }
+
   test("merge epoch plan has exactly one shuffle (repartition doubles as agg distribution)") {
+    // the merge's own executed plans: one exchange, passing the planned
+    // task ids through, and the window's sort is the only sort
+    import org.apache.spark.sql.catalyst.plans.physical.ShufflePartitionIdPassThrough
+    import org.apache.spark.sql.execution.{QueryExecution, SortExec}
     val work = TestSpark.tmpDir("planspec")
-    val cfg = GenConfig(nEvents = 2000L)
-    ChangeGen.writeLog(spark, cfg, s"$work/log", nBatches = 1, partitions = 2)
+    ChangeGen.writeLog(spark, GenConfig(nEvents = 2000L), s"$work/log", nBatches = 2,
+      partitions = 2)
     val table = new LakeTable(spark, s"$work/table")
-    ingest.BatchReplay.replay(spark, s"$work/log", table, numBuckets = 4,
-      saltBuckets = 2, recordMeta = false)
-    // replay a second epoch and capture the plan of the final state read —
-    // the merge's write already ran; assert on the state-read side plus a
-    // re-built merge-shaped query
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
-    val events = spark.read.parquet(s"$work/log/batch-00000")
-    val b = pmod(xxhash64(col("repo")), lit(4)).cast("int")
-    val slt = pmod(xxhash64(col("path")), lit(2)).cast("int")
-    val w = Window.partitionBy(col("b"), col("s"), col("repo"), col("path"))
-      .orderBy(col("lsn").desc)
-    val merged = events
-      .withColumn("b", b).withColumn("s", slt)
-      .repartition(8, col("b"), col("s"))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") === 1)
-    val plan = executed(merged)
-    assert(countNodes(plan, _.isInstanceOf[ShuffleExchangeExec]) == 1,
-      s"expected exactly 1 exchange, plan:\n${plan.toString.take(2000)}")
+    // the data write's executed plan, for each epoch: the first builds the
+    // table, the second merges onto it through the touched scan's plan
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "save") plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      ingest.BatchReplay.replay(spark, s"$work/log", table, numBuckets = 4,
+        saltBuckets = 2, recordMeta = false)
+      val deadline = System.nanoTime() + 10_000_000_000L
+      while (plans.size < 2 && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    assert(plans.size == 2, s"expected the two epochs' data writes, saw ${plans.size}")
+    plans.asScala.foreach { plan =>
+      val nodes = deep(plan)
+      val exchanges = nodes.collect { case e: ShuffleExchangeExec => e }
+        .distinctBy(System.identityHashCode)
+      assert(exchanges.size == 1, s"expected exactly 1 exchange, plan:\n${plan.toString.take(3000)}")
+      assert(exchanges.head.outputPartitioning.isInstanceOf[ShufflePartitionIdPassThrough],
+        s"the exchange hashes instead of passing task ids through:\n${exchanges.head}")
+      // the window's sort serves the writer too: it starts with the
+      // bucket column the write partitions by, so the writer adds none
+      assert(nodes.collect { case s: SortExec => s }.distinctBy(System.identityHashCode).size == 1,
+        s"expected only the window's sort:\n${plan.toString.take(3000)}")
+      // the writer sorts unless its input, the FINAL adaptive plan, is
+      // ordered by the bucket column first
+      val ordering = (plan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }).outputOrdering
+      assert(ordering.headOption.exists(_.child.references.toSeq.map(_.name) == Seq("b")),
+        s"write input is not ordered by bucket: $ordering")
+    }
   }
 
   test("preimage CDC feed is one pass: a single key join, no union, no re-scan per variant") {
@@ -164,17 +197,8 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q40/q41 explode the corpus ONCE: the DF branch reuses the per-doc exchange") {
-    // deep traversal incl. AQE query stages and reused exchanges; distinct
-    // scan INSTANCES tell reuse (one shared subtree) from recompute (two)
-    def deep(p: SparkPlan): Seq[SparkPlan] = {
-      val inner = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => Seq(q.plan)
-        case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => Seq(r.child)
-        case _ => Seq.empty
-      }
-      p +: (p.children ++ inner ++ p.subqueries).flatMap(deep)
-    }
+    // distinct scan INSTANCES tell reuse (one shared subtree) from
+    // recompute (two)
     Seq("q40_doc_freq", "q41_tfidf_topk").foreach { q =>
       // collect(), not the noop-write helper: AQE reuses exchanges at
       // RUNTIME, so only this df's own finalized adaptive plan shows it

@@ -16,6 +16,18 @@ object TestSpark {
     s
   }
 
+  /** Runs `f` with the shared session at `n` shuffle partitions. The
+    * merge splits a bucket only when it holds more than one reduce task's
+    * share of an epoch, so a fixture that needs several files per bucket
+    * (work for a compaction) builds its table at more partitions than it
+    * has buckets. */
+  def withShufflePartitions[T](n: Int)(f: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    spark.conf.set(key, n.toString)
+    try f finally spark.conf.set(key, before)
+  }
+
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 }

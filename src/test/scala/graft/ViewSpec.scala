@@ -35,8 +35,10 @@ class ViewSpec extends AnyFunSuite {
     ChangeGen.writeLog(spark, GenConfig(nEvents = 1200L), s"$work/log12", nBatches = 2, partitions = 2)
     ChangeGen.writeLog(spark, GenConfig(nEvents = 1800L), s"$work/logAll", nBatches = 3, partitions = 2)
     val table = new LakeTable(spark, s"$work/table")
-    BatchReplay.replay(spark, s"$work/log12", table, numBuckets = 4, saltBuckets = 2,
-      recordMeta = false)
+    // each of the 4 buckets holds over one of 8 tasks' share of an epoch,
+    // so every epoch writes each bucket as 2 files: compaction has work
+    TestSpark.withShufflePartitions(8)(BatchReplay.replay(spark, s"$work/log12", table,
+      numBuckets = 4, saltBuckets = 2, recordMeta = false))
     table
   }
 

@@ -188,4 +188,64 @@ class WriteStatsSpec extends AnyFunSuite {
     }
     assert(measured.read().count() == new LakeTable(spark, table.root).read().count())
   }
+
+  /** Per bucket, the files the table's latest merge wrote. */
+  private def filesWrittenPerBucket(table: LakeTable): Map[Int, Seq[FileEntry]] = {
+    val snap = table.currentSnapshot().get
+    val dir = s"data/${snap.summary.flatMap(_.writeDir).get}/"
+    snap.allFiles.filter(_.relPath.startsWith(dir)).groupBy(_.bucket)
+  }
+
+  private def keyedEvents(rows: Seq[(Long, String, String)]) = {
+    import spark.implicits._
+    val ts = java.sql.Timestamp.valueOf("2024-03-01 00:00:00")
+    rows.map { case (lsn, r, p) => (lsn, "U", ts, r, p, "c", "text", s"body-$lsn") }
+      .toDF("lsn", "op", "ts", "repo", "path", "commit", "lang", "content")
+  }
+
+  test("an epoch onto a table of even buckets writes exactly one file per touched bucket") {
+    val table = new LakeTable(spark, s"${TestSpark.tmpDir("layout-even")}/table")
+    // 8 buckets onto the session's 4 tasks: no bucket holds more than a
+    // task's share, so each is written whole
+    val merge = new MergeInto(table, numBuckets = 8, saltBuckets = 4, recordMeta = false)
+    def key(j: Int) = (s"r${j % 200}", s"p$j")
+    merge.apply(keyedEvents((0 until 4000).map(j => (j.toLong, key(j)._1, key(j)._2))), 0L): Unit
+    val base = filesWrittenPerBucket(table)
+    assert(base.size == 8 && base.values.exists(_.size > 1),
+      s"fixture: the fresh table should fan buckets out, got ${base.view.mapValues(_.size).toMap}")
+    // updates of 200 stored keys, spread over every repo
+    val st = merge.apply(keyedEvents((0 until 200).map { i =>
+      val (r, p) = key(i * 19)
+      (10000L + i, r, p)
+    }), 1L)
+    val written = filesWrittenPerBucket(table)
+    assert(st.bucketsTouched == 8 && written.size == 8)
+    assert(written.values.forall(_.size == 1),
+      s"files per bucket: ${written.view.mapValues(_.size).toMap}")
+    assert(table.read().count() == 4000L)
+  }
+
+  test("an epoch onto a table with a hot bucket splits only that bucket, over 2..salt tasks") {
+    val table = new LakeTable(spark, s"${TestSpark.tmpDir("layout-hot")}/table")
+    val merge = new MergeInto(table, numBuckets = 4, saltBuckets = 4, recordMeta = false)
+    // one repo holds 60% of the keys, so its bucket holds well over a
+    // quarter of the table, the share of one of the session's 4 tasks
+    def key(j: Int) = (if (j % 5 < 3) "hot" else s"r${j % 97}", s"p$j")
+    merge.apply(keyedEvents((0 until 4000).map(j => (j.toLong, key(j)._1, key(j)._2))), 0L): Unit
+    val hot = Math.floorMod(org.apache.spark.sql.graftx.Bridge.xxhash64("hot"), 4)
+    // updates of 200 stored keys, hot and not
+    merge.apply(keyedEvents((0 until 200).map { i =>
+      val (r, p) = key(i * 19)
+      (10000L + i, r, p)
+    }), 1L): Unit
+    val written = filesWrittenPerBucket(table)
+    assert(written.size == 4, s"fixture: the epoch should touch every bucket: ${written.keySet}")
+    val hotFiles = written(hot)
+    assert(hotFiles.size >= 2 && hotFiles.size <= 4,
+      s"hot bucket $hot written as ${hotFiles.size} file(s)")
+    assert(hotFiles.map(_.nKeys).max < hotFiles.map(_.nKeys).sum)
+    assert(written.removed(hot).values.forall(_.size == 1),
+      s"files per bucket: ${written.view.mapValues(_.size).toMap}")
+    assert(table.read().count() == 4000L)
+  }
 }
