@@ -51,9 +51,10 @@ final case class FileEntry(
       * task launches. The ranges BITE on
       * compaction's byte-budget splits, which are range-partitioned on
       * (bucket, repo, path) and therefore KEY-DISJOINT — a lookup plans
-      * exactly the one range file of its bucket; the merge's salt files
-      * spread keys by hash, so their ranges overlap and survive the
-      * filter (row-group stats bound IO inside them instead). Order is
+      * exactly the one range file of its bucket; the files of a bucket
+      * the merge split spread keys by path hash, so their ranges overlap
+      * and survive the filter (row-group stats bound IO inside them
+      * instead). Order is
       * UNSIGNED UTF-8 BYTE order (parquet's binary stats order — NOT
       * String.compareTo). null = unknown (legacy entry / a bound past
       * FileStatsTracker.MaxKeyStatBytes) — never prunable. */

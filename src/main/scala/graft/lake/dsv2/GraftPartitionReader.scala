@@ -3,10 +3,10 @@ package graft.lake.dsv2
 import graft.lake.LakeTable
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.conf.HadoopParquetConfiguration
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.conf.HadoopParquetConfiguration
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{MessageType, PrimitiveType}

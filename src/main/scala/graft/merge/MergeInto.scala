@@ -50,10 +50,11 @@ import org.apache.spark.sql.types._
   *     `saltBuckets` ways and the parts are dealt round-robin, so a
   *     backfill fans every bucket out as before.
   *   - The stage runs at most `max(spark.sql.shuffle.partitions, input
-  *     bytes / advisory partition size)` tasks and no more than there are
-  *     parts: a small epoch runs no more tasks than the session's shuffle
-  *     parallelism, a large one still gets a task per ~advisory size of
-  *     input, and no task is left empty.
+  *     bytes / advisory partition size)` tasks (input: the source plus the
+  *     target files; the source alone when there are none) and no more
+  *     than there are parts: a small epoch runs no more tasks than the
+  *     session's shuffle parallelism, a large one still gets a task per
+  *     ~advisory size of input, and no task is left empty.
   *   - Untouched buckets are never read or rewritten, so steady-state cost
   *     tracks change volume, not table size.
   *   - The target is planned from the manifest (paths and lengths, no
@@ -127,7 +128,7 @@ final class MergeInto(
   /** The most tasks the merge's reduce stage may run: the session's
     * shuffle parallelism, unless the input's estimated size (the
     * planner's, from file lengths) needs more tasks of the advisory
-    * partition size. */
+    * partition size. An input of unknown size allows one task per part. */
   private def reduceTasks(input: DataFrame): Int = {
     val conf = input.sparkSession.conf
     val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
@@ -320,7 +321,12 @@ final class MergeInto(
     // identical payloads.
     val both = source.withColumn(SrcCol, lit(true))
       .unionByName(target.withColumn(SrcCol, lit(false)))
-    val plan = MergeInto.planTasks(loads, reduceTasks(both), saltBuckets)
+    // sized from the source alone when no target file is read: the empty
+    // target relation has no size estimate, which would otherwise read as
+    // unbounded and run one task per part (a fresh table's small backfill
+    // then pays the fixed cost of every task)
+    val plan = MergeInto.planTasks(loads,
+      reduceTasks(if (targetFiles.isEmpty) source else both), saltBuckets)
     // a bucket's tasks, indexed by its part; the literal names only the
     // touched buckets
     val tasksOf = element_at(typedLit(plan.map { case (b, ts) => b -> ts.toSeq }), col(BucketCol))
