@@ -47,14 +47,14 @@ import org.apache.spark.sql.types._
   *   - Hot-REPO skew shows up as a hot BUCKET, whose load then exceeds a
   *     share and is split over up to `saltBuckets` tasks/files. A fresh
   *     table has no loads (no touched scan runs): every bucket is split
-  *     `saltBuckets` ways and the parts are dealt round-robin, so a
-  *     backfill fans every bucket out as before.
+  *     `saltBuckets` ways and each part goes to the task the former hash
+  *     repartition on (bucket, salt) chose, so a backfill keeps its
+  *     layout, hot bucket fanned out included.
   *   - The stage runs at most `max(spark.sql.shuffle.partitions, input
-  *     bytes / advisory partition size)` tasks (input: the source plus the
-  *     target files; the source alone when there are none) and no more
-  *     than there are parts: a small epoch runs no more tasks than the
-  *     session's shuffle parallelism, a large one still gets a task per
-  *     ~advisory size of input, and no task is left empty.
+  *     bytes / advisory partition size)` tasks and no more than there are
+  *     parts: a small epoch runs no more tasks than the session's shuffle
+  *     parallelism, a large one still gets a task per ~advisory size of
+  *     input.
   *   - Untouched buckets are never read or rewritten, so steady-state cost
   *     tracks change volume, not table size.
   *   - The target is planned from the manifest (paths and lengths, no
@@ -321,12 +321,7 @@ final class MergeInto(
     // identical payloads.
     val both = source.withColumn(SrcCol, lit(true))
       .unionByName(target.withColumn(SrcCol, lit(false)))
-    // sized from the source alone when no target file is read: the empty
-    // target relation has no size estimate, which would otherwise read as
-    // unbounded and run one task per part (a fresh table's small backfill
-    // then pays the fixed cost of every task)
-    val plan = MergeInto.planTasks(loads,
-      reduceTasks(if (targetFiles.isEmpty) source else both), saltBuckets)
+    val plan = MergeInto.planTasks(loads, reduceTasks(both), saltBuckets)
     // a bucket's tasks, indexed by its part; the literal names only the
     // touched buckets
     val tasksOf = element_at(typedLit(plan.map { case (b, ts) => b -> ts.toSeq }), col(BucketCol))
@@ -508,29 +503,41 @@ object MergeInto {
     * `loads` is each touched bucket's expected row count, -1 when
     * unknown. A known load over one task's share (the total over
     * `maxTasks`) is split into as many shares as it holds, at most
-    * `maxWays`; an unknown load is split `maxWays` ways, each part
-    * weighing a share. The stage runs min(maxTasks, parts) tasks, and the
-    * parts are packed largest-first onto the least-loaded task (Graham's
-    * LPT rule, within 4/3 of the best makespan); equal weights, as on a
-    * fresh table, deal the parts round-robin. */
+    * `maxWays`, and the parts are packed largest-first onto the
+    * least-loaded task (Graham's LPT rule, within 4/3 of the best
+    * makespan). An unknown load cannot be packed: it is split `maxWays`
+    * ways, and each part goes to the task a hash repartition on (bucket,
+    * part) would send it to, Spark's Murmur3 partition id, weighing a
+    * share. The stage runs min(maxTasks, parts) tasks. */
   private[graft] def planTasks(loads: Map[Int, Long], maxTasks: Int,
                                maxWays: Int): Map[Int, IndexedSeq[Int]] = {
+    import org.apache.spark.unsafe.hash.Murmur3_x86_32.hashInt
     val share = math.max(1.0, loads.values.filter(_ >= 0L).sum.toDouble / maxTasks)
-    val parts = loads.toSeq.sortBy(_._1).flatMap { case (b, load) =>
-      val ways = if (load < 0L) maxWays else math.ceil(load / share).toInt.max(1).min(maxWays)
-      val weight = if (load < 0L) share else load.toDouble / ways
-      (0 until ways).map(i => (b, i, weight))
+    val ways = loads.map { case (b, load) =>
+      b -> (if (load < 0L) maxWays else math.ceil(load / share).toInt.max(1).min(maxWays))
+    }
+    val nTasks = math.min(maxTasks, ways.values.sum).max(1)
+    val assigned = Array.fill(nTasks)(0.0)
+    val hashed = loads.collect { case (b, load) if load < 0L =>
+      b -> (0 until maxWays).map { i =>
+        val t = Math.floorMod(hashInt(i, hashInt(b, 42)), nTasks)
+        assigned(t) += share
+        t
+      }
     }
     // (assigned weight, task): the least-loaded task first, the lowest on ties
     val free = scala.collection.mutable.PriorityQueue.empty(Ordering[(Double, Int)].reverse)
-    (0 until math.min(maxTasks, parts.size)).foreach(t => free.enqueue((0.0, t)))
-    parts.sortBy(-_._3) // stable: equal weights keep bucket order
+    assigned.zipWithIndex.foreach(free.enqueue(_))
+    val packed = loads.toSeq.filter(_._2 >= 0L).sortBy(_._1)
+      .flatMap { case (b, load) => (0 until ways(b)).map(i => (b, i, load.toDouble / ways(b))) }
+      .sortBy(-_._3) // stable: equal weights keep bucket order
       .map { case (b, i, w) =>
         val (l, t) = free.dequeue()
         free.enqueue((l + w, t))
         (b, i, t)
       }
       .groupBy(_._1).map { case (b, ps) => b -> ps.sortBy(_._2).map(_._3).toIndexedSeq }
+    hashed ++ packed
   }
 }
 

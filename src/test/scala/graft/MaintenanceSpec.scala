@@ -59,8 +59,8 @@ class MaintenanceSpec extends AnyFunSuite {
 
   test("compaction rebases across a concurrent merge instead of starving") {
     import spark.implicits._
-    // one epoch onto a fresh table: every bucket is split salt ways, so
-    // every bucket is oversized for the compaction below
+    // one epoch onto a fresh table, which splits every bucket salt ways:
+    // the touched bucket and others are left in several files
     val (table, _) = replayed(2000L, 1)
     val snapBefore = table.currentSnapshot().get
     val stateBefore = table.read().collect().map(_.toString).toSet
