@@ -47,9 +47,11 @@ import org.apache.spark.sql.types._
   *   - Hot-REPO skew shows up as a hot BUCKET, whose load then exceeds a
   *     share and is split over up to `saltBuckets` tasks/files. A fresh
   *     table has no loads (no touched scan runs): every bucket is split
-  *     `saltBuckets` ways and each part goes to the task the former hash
-  *     repartition on (bucket, salt) chose, so a backfill keeps its
-  *     layout, hot bucket fanned out included.
+  *     `saltBuckets` ways and each part goes to the task Spark's hash
+  *     partitioning on (bucket, part) picks. Spreading those parts evenly
+  *     instead would leave no task empty, and on a small backfill the
+  *     fixed cost of each extra non-empty task (a file writer, a task
+  *     commit) outweighs the balance.
   *   - The stage runs at most `max(spark.sql.shuffle.partitions, input
   *     bytes / advisory partition size)` tasks and no more than there are
   *     parts: a small epoch runs no more tasks than the session's shuffle
@@ -506,9 +508,9 @@ object MergeInto {
     * `maxWays`, and the parts are packed largest-first onto the
     * least-loaded task (Graham's LPT rule, within 4/3 of the best
     * makespan). An unknown load cannot be packed: it is split `maxWays`
-    * ways, and each part goes to the task a hash repartition on (bucket,
-    * part) would send it to, Spark's Murmur3 partition id, weighing a
-    * share. The stage runs min(maxTasks, parts) tasks. */
+    * ways, and each part goes to the task `repartition(n, bucket, part)`
+    * would send it to (Spark's Murmur3 partition id), weighing a share.
+    * The stage runs n = min(maxTasks, parts) tasks. */
   private[graft] def planTasks(loads: Map[Int, Long], maxTasks: Int,
                                maxWays: Int): Map[Int, IndexedSeq[Int]] = {
     import org.apache.spark.unsafe.hash.Murmur3_x86_32.hashInt

@@ -248,4 +248,14 @@ class WriteStatsSpec extends AnyFunSuite {
       s"files per bucket: ${written.view.mapValues(_.size).toMap}")
     assert(table.read().count() == 4000L)
   }
+
+  test("parts of unknown load go where a hash repartition on (bucket, part) sends them") {
+    import spark.implicits._
+    // a fresh table's plan: every load unknown, every bucket split 4 ways
+    val plan = MergeInto.planTasks((0 until 16).map(_ -> -1L).toMap, maxTasks = 64, maxWays = 4)
+    val hashed = (for (b <- 0 until 16; p <- 0 until 4) yield (b, p)).toDF("b", "p")
+      .repartition(64, col("b"), col("p"))
+      .select(col("b"), col("p"), spark_partition_id()).collect()
+    assert(hashed.length == 64 && hashed.forall(r => plan(r.getInt(0))(r.getInt(1)) == r.getInt(2)))
+  }
 }
