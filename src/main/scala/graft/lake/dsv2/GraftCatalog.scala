@@ -780,10 +780,13 @@ private final class GraftResultScan(schema: StructType, rs: Array[InternalRow])
   override def rows(): Array[InternalRow] = rs
 }
 
-/** DDL-time schema validation: the set of column types the graft row
-  * reader can decode (GraftPartitionReader.readValue). Accepting a
-  * richer type at CREATE/ALTER time would commit a table that is
-  * permanently unreadable through the row path — fail at DDL instead. */
+/** DDL-time schema validation: the flat scalar column types the lake's
+  * state model is defined over. Schema evolution (SchemaRegistry's
+  * widening rules, the reader's null-for-absent and int→long /
+  * float→double reads) is defined over flat columns of these types, and
+  * they are what the specs and fuzzers read back; a nested, map or
+  * decimal column would commit a table whose evolution no rule covers
+  * and no test reads — fail at DDL instead. */
 object GraftCatalog {
   /** Engine key columns: bucketing (`repo`), merge keys (`repo`,`path`),
     * LWW ordering + manifest stats (`lsn`), and the change-op envelope

@@ -3,105 +3,180 @@ package graft.lake.dsv2
 import graft.lake.LakeTable
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.connector.read.PartitionReader
-import org.apache.spark.sql.types.StructType
+import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
+import org.apache.parquet.hadoop.ParquetInputFormat
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
+import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
-/** Columnar (vectorized) read path for the graft DSv2 scan.
+/** Reader factory of every graft DSv2 scan, batch and streaming: each
+  * split decodes through [[GraftColumnarPartitionReader]]. Columnar is
+  * constant per factory, so Spark's all-or-nothing columnar requirement
+  * on the exec node holds by construction. */
+final class GraftReaderFactory(physicalSchema: StructType, required: StructType,
+                               includeTombstones: Boolean = false)
+    extends PartitionReaderFactory {
+  /** Former-name eras per current column (FieldIds) — computed from the
+    * SNAPSHOT schema, which carries the alias metadata (Spark's column
+    * pruner is not obligated to preserve field metadata into `required`). */
+  private val aliasMap: Map[String, Seq[String]] =
+    graft.schema.FieldIds.aliasMap(physicalSchema)
+
+  /** Conf for Spark's vectorized reader, prepared once on the driver
+    * (SQLConf-derived keys; see Bridge.parquetReadConf) and shipped with
+    * the factory: a fresh Configuration() on an executor would lose every
+    * driver-set fs property (s3a creds, endpoints, custom schemes). */
+  private val conf: org.apache.spark.util.SerializableConfiguration =
+    org.apache.spark.sql.graftx.Bridge.parquetReadConf(
+      org.apache.spark.sql.SparkSession.active)
+
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
+
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("the graft scan reads columnar batches only")
+
+  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] = {
+    val p = partition.asInstanceOf[GraftInputPartition]
+    new GraftColumnarPartitionReader(p, readSchema(p.lsnLowerExclusive),
+      projectLen = required.length, filterTombstones = !includeTombstones,
+      conf.value, aliasMap)
+  }
+
+  /** The projected columns, then the ones decoded only to filter:
+    * `_deleted` (always, so the batch never has zero columns) and, under a
+    * row bound, `lsn`. Under includeTombstones `_deleted` is ordinary data
+    * and filters nothing. */
+  private def readSchema(lsnLowerExclusive: Long): StructType = {
+    val filterOnly = StructField(LakeTable.DeletedCol, BooleanType) +:
+      (if (lsnLowerExclusive != Long.MinValue) Seq(StructField("lsn", LongType)) else Nil)
+    StructType(required.fields ++ filterOnly.filterNot(f => required.fieldNames.contains(f.name)))
+  }
+}
+
+/** The graft DSv2 scan's partition reader.
   *
   * Delegates the parquet decode to Spark's own
   * `VectorizedParquetRecordReader` — column-parallel page decompression
   * straight into ColumnVectors, handed to whole-stage codegen as
   * ColumnarBatches with zero per-row object construction. That is the
-  * read shape wide binary/media-heavy rows need at 100 TB, where the
-  * row-at-a-time Group decode (GraftPartitionReader) pays an object tree
-  * per row. The reference stores Arrow columnar for the same reason
-  * (reference src/places/writer.rs:3-13) but then decodes rows one at a
-  * time — the wart VERDICT r3 told us not to replicate.
+  * read shape wide binary/media-heavy rows need at 100 TB. The reference
+  * stores Arrow columnar for the same reason (reference
+  * src/places/writer.rs:3-13) but then decodes rows one at a time — the
+  * wart VERDICT r3 told us not to replicate.
   *
-  * The lake's residual read semantics ride on top WITHOUT copying:
-  * tombstone rows (`_deleted`, hidden under `read()` semantics) are
-  * dropped by wrapping each projected vector in a [[SelectedColumnVector]]
-  * — a selection-map delegate over the reader's own vectors (the
-  * zero-copy trick Iceberg's vectorized delete-filter uses). An all-live
-  * batch (the common case: most files have few tombstones) passes the
+  * The split's predicates (`lsn > bound`, `repo =`, `path =`) are pushed
+  * into parquet as a `FilterPredicate`: row groups are skipped by their
+  * statistics, dictionaries and bloom filters, and pages by the column
+  * index. Merge output is sorted by (repo, path) within each file, so a
+  * point lookup decodes 1-2 row groups. A predicate is pushed only on a
+  * column the file holds: on an absent column it evaluates against
+  * all-null and would drop every row.
+  *
+  * The lake's row-level read semantics ride on top WITHOUT copying: rows
+  * hidden by the scan — tombstones (`_deleted`, under `read()` semantics)
+  * and rows at or below the split's lsn bound (carried copy-on-write rows
+  * of a changes read) — are dropped by wrapping each projected vector in
+  * a [[SelectedColumnVector]], a selection-map delegate over the reader's
+  * own vectors (the zero-copy trick Iceberg's vectorized delete-filter
+  * uses). A batch with nothing to drop (the common case) passes the
   * reader's vectors through untouched.
   *
   * Schema evolution is the vectorized reader's native behavior: a
   * requested column absent from an old file reads as all-null
   * (missing-column vector), and a column widened since the file was
   * written (int→long, float→double) decodes through Spark's widening
-  * updaters — the same tolerant-reader rules the row path implements by
-  * hand.
-  *
-  * The scan chooses this path only for whole-state scans (no lsn bound,
-  * no key point-lookup): those carry pushed row-group/dictionary filters
-  * that the row reader applies via parquet-mr record filtering, and they
-  * are latency-bound single-file reads where vectorization buys nothing.
+  * updaters. Renamed columns are requested under the era name the file
+  * stores them under (FieldIds aliases).
   */
-final class GraftColumnarPartitionReader(absPath: String,
+final class GraftColumnarPartitionReader(p: GraftInputPartition,
                                          /** Columns to decode, in batch
                                            * order: the projected columns
-                                           * first, then `_deleted` when it
-                                           * is read only for filtering. */
+                                           * first, then the filter-only
+                                           * ones. */
                                          readSchema: StructType,
                                          /** How many leading columns of
                                            * `readSchema` the scan emits. */
                                          projectLen: Int,
                                          filterTombstones: Boolean,
-                                         rangeStart: Long, rangeEnd: Long,
                                          conf0: Configuration,
                                          /** current name → former names
                                            * (rename eras, FieldIds). */
                                          aliasMap: Map[String, Seq[String]] = Map.empty)
     extends PartitionReader[ColumnarBatch] {
 
+  // copy: the requested schema and the filter predicate are set per
+  // reader, and the shipped conf is shared by the readers of an executor
   private val conf = new Configuration(conf0)
   private val reader =
     org.apache.spark.sql.graftx.Bridge.vectorizedParquetReader(4096)
   private var initialized = false
   private var batch: ColumnarBatch = _
 
+  private val bound = p.lsnLowerExclusive
   private val delIdx =
     if (filterTombstones) readSchema.fieldIndex(LakeTable.DeletedCol) else -1
+  private val lsnIdx = if (bound != Long.MinValue) readSchema.fieldIndex("lsn") else -1
 
   private def init(): Unit = {
-    // rename-era substitution (FieldIds aliases): Spark's vectorized
-    // reader resolves requested columns BY NAME against the file, so a
-    // column requested under its post-rename name would read all-null
-    // from a pre-rename file. Substitute the era name THIS file stores
-    // the column under — positional, so the decoded vector lands in the
-    // right batch slot regardless of which name era produced it. The
-    // footer consult is the same LRU-cached lookup the row path uses;
-    // alias-free tables skip it entirely.
-    if (aliasMap.nonEmpty) {
-      val fileSchema = GraftPartitionReader.fileSchemaOf(absPath, new Path(absPath), conf)
-      val sub = StructType(readSchema.fields.map { f =>
-        if (fileSchema.containsField(f.name)) f
-        else aliasMap.getOrElse(f.name, Nil).find(fileSchema.containsField) match {
-          case Some(era) => f.copy(name = era)
-          case None => f
-        }
-      })
-      if (sub != readSchema)
-        org.apache.spark.sql.graftx.Bridge.setRequestedSchema(conf, sub.json)
-    }
-    // same byte-range rule as the row path (and Spark's own parquet
-    // splits): a row group belongs to the split holding its midpoint
+    val path = new Path(p.absPath)
+    // Spark's parquet split rule: a row group belongs to the split
+    // holding its midpoint (0..MaxValue = the whole file)
     val length =
-      if (rangeEnd == Long.MaxValue) Long.MaxValue - rangeStart
-      else rangeEnd - rangeStart
-    // mapred.FileSplit (which extends the mapreduce one): Spark 4's
-    // SpecificParquetRecordReaderBase downcasts to the old-API class
-    val split = new org.apache.hadoop.mapred.FileSplit(
-      new Path(absPath), rangeStart, length, Array.empty[String])
-    val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
-      conf, new org.apache.hadoop.mapreduce.TaskAttemptID())
-    reader.initialize(split, ctx)
+      if (p.rangeEnd == Long.MaxValue) Long.MaxValue - p.rangeStart
+      else p.rangeEnd - p.rangeStart
+    // one footer read per split: its schema decides the era names and the
+    // pushable predicates, its row groups are this split's, and its open
+    // stream is handed on to the reader
+    val opened = org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
+      .openFileAndReadFooter(conf,
+        org.apache.spark.sql.execution.datasources.PartitionedFile(InternalRow.empty,
+          org.apache.spark.paths.SparkPath.fromPath(path), p.rangeStart, length),
+        true)
+    try {
+      val fileSchema = opened.footer.getFileMetaData.getSchema
+      // rename-era substitution: the vectorized reader resolves requested
+      // columns BY NAME against the file, so a column requested under its
+      // post-rename name would read all-null from a pre-rename file.
+      // Request the era name THIS file stores it under — positional, so
+      // the decoded vector lands in the right batch slot.
+      val requested =
+        if (aliasMap.isEmpty) readSchema
+        else StructType(readSchema.fields.map { f =>
+          if (fileSchema.containsField(f.name)) f
+          else aliasMap.getOrElse(f.name, Nil).find(fileSchema.containsField) match {
+            case Some(era) => f.copy(name = era)
+            case None => f
+          }
+        })
+      org.apache.spark.sql.graftx.Bridge.setRequestedSchema(conf, requested.json)
+      pushed(fileSchema.containsField).foreach(ParquetInputFormat.setFilterPredicate(conf, _))
+      // mapred.FileSplit (which extends the mapreduce one): Spark 4's
+      // SpecificParquetRecordReaderBase downcasts to the old-API class
+      val split = new org.apache.hadoop.mapred.FileSplit(path, p.rangeStart, length,
+        Array.empty[String])
+      val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+        conf, new org.apache.hadoop.mapreduce.TaskAttemptID())
+      reader.initialize(split, ctx, Some(opened.inputFile), Some(opened.inputStream),
+        Some(opened.footer))
+    } catch {
+      case e: Throwable => opened.inputStream.close(); throw e
+    }
     reader.initBatch(new StructType(),
       new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(0))
     reader.enableReturningBatches()
     initialized = true
+  }
+
+  /** The split's lsn bound and key equalities, on the columns `inFile`
+    * holds. */
+  private def pushed(inFile: String => Boolean): Option[FilterPredicate] = {
+    def key(col: String, v: String): Option[FilterPredicate] =
+      Option.when(v != null && inFile(col))(FilterApi.eq(FilterApi.binaryColumn(col),
+        org.apache.parquet.io.api.Binary.fromString(v)))
+    (Option.when[FilterPredicate](bound != Long.MinValue && inFile("lsn"))(
+      FilterApi.gt(FilterApi.longColumn("lsn"), java.lang.Long.valueOf(bound))) ++
+      key("repo", p.repoEq) ++ key("path", p.pathEq)).reduceOption(FilterApi.and)
   }
 
   override def next(): Boolean = {
@@ -110,14 +185,15 @@ final class GraftColumnarPartitionReader(absPath: String,
       val rb = reader.resultBatch()
       val n = rb.numRows()
       if (n > 0) {
-        if (!filterTombstones) { batch = project(rb, n); return true }
-        val del = rb.column(delIdx)
+        if (delIdx < 0 && lsnIdx < 0) { batch = project(rb, n); return true }
+        val del = if (delIdx >= 0) rb.column(delIdx) else null
+        val lsn = if (lsnIdx >= 0) rb.column(lsnIdx) else null
         var live = 0
         var i = 0
-        while (i < n) { if (!isDel(del, i)) live += 1; i += 1 }
+        while (i < n) { if (keep(del, lsn, i)) live += 1; i += 1 }
         if (live == n) { batch = project(rb, n); return true }
-        if (live > 0) { batch = select(rb, n, live); return true }
-        // all-tombstone batch: read on
+        if (live > 0) { batch = select(rb, n, live, del, lsn); return true }
+        // every row dropped: read on
       }
     }
     false
@@ -127,12 +203,14 @@ final class GraftColumnarPartitionReader(absPath: String,
 
   override def close(): Unit = reader.close()
 
-  // a null _deleted (file predates the column) is live
-  private def isDel(v: ColumnVector, i: Int): Boolean =
-    !v.isNullAt(i) && v.getBoolean(i)
+  // a null _deleted (file predates the column) is live; a null lsn
+  // (absent column) is never below the bound
+  private def keep(del: ColumnVector, lsn: ColumnVector, i: Int): Boolean =
+    (del == null || del.isNullAt(i) || !del.getBoolean(i)) &&
+      (lsn == null || lsn.isNullAt(i) || lsn.getLong(i) > bound)
 
-  /** All rows live: hand the reader's vectors through, projected down to
-    * the emitted columns (drops a filter-only `_deleted`). */
+  /** All rows kept: hand the reader's vectors through, projected down to
+    * the emitted columns (drops the filter-only ones). */
   private def project(rb: ColumnarBatch, n: Int): ColumnarBatch = {
     val cols = new Array[ColumnVector](projectLen)
     var i = 0
@@ -140,13 +218,13 @@ final class GraftColumnarPartitionReader(absPath: String,
     new ColumnarBatch(cols, n)
   }
 
-  /** Mixed batch: emit only live rows via a selection map — no data moves. */
-  private def select(rb: ColumnarBatch, n: Int, live: Int): ColumnarBatch = {
+  /** Mixed batch: emit only kept rows via a selection map — no data moves. */
+  private def select(rb: ColumnarBatch, n: Int, live: Int,
+                     del: ColumnVector, lsn: ColumnVector): ColumnarBatch = {
     val sel = new Array[Int](live)
-    val del = rb.column(delIdx)
     var i = 0
     var j = 0
-    while (i < n) { if (!isDel(del, i)) { sel(j) = i; j += 1 }; i += 1 }
+    while (i < n) { if (keep(del, lsn, i)) { sel(j) = i; j += 1 }; i += 1 }
     val cols = new Array[ColumnVector](projectLen)
     var k = 0
     while (k < projectLen) {

@@ -728,21 +728,8 @@ final class GraftScan(root: String, physicalSchema: StructType, required: Struct
       runtimePruned += before - files.size
     }
   }
-  /** Vectorized (columnar) decode for whole-state scans; row decode where
-    * pushed parquet filters do the work. An lsn-bounded (CDC-range) or
-    * key-point-lookup scan reads few rows through row-group/dictionary
-    * skipping the columnar path does not carry — and those scans are
-    * latency-bound, not decode-bound. Everything else (the analytic scan
-    * over a wide table, exactly where decode cost dominates) goes
-    * columnar. `.option("columnar", false)` opts out. */
-  private def columnarEligible: Boolean =
-    options.getBoolean("columnar", true) &&
-      rowBound == Long.MinValue && repoEq == null && pathEq == null &&
-      !(required.isEmpty && includeTombstones) // zero-column batch shape
-
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(physicalSchema, required, includeTombstones,
-      columnar = columnarEligible)
+    new GraftReaderFactory(physicalSchema, required, includeTombstones)
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new GraftMicroBatchStream(root, physicalSchema, required,

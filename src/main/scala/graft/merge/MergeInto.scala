@@ -38,14 +38,14 @@ import org.apache.spark.sql.types._
   *     rows (the manifest's per-file `nKeys`) plus its source rows (the
   *     touched scan counts them per bucket, in the same one job that finds
   *     the buckets). A bucket stays whole, one task and one file, unless
-  *     its load is over one task's share; then it is split by
-  *     `pmod(xxhash64(path), k)`, k ≤ `saltBuckets`. Whole buckets and
+  *     its load holds at least 1.5 task shares; then it is split by
+  *     `pmod(xxhash64(path), k)`, k = its shares rounded, ≤ `saltBuckets`. Whole buckets and
   *     parts are packed largest-first onto the least-loaded task, so the
   *     tasks finish together and an epoch writes one file per touched
   *     bucket plus one per extra part. Rows reach their task through
   *     `repartitionById` on a literal over the touched buckets only.
-  *   - Hot-REPO skew shows up as a hot BUCKET, whose load then exceeds a
-  *     share and is split over up to `saltBuckets` tasks/files. A fresh
+  *   - Hot-REPO skew shows up as a hot BUCKET, whose load then holds
+  *     several shares and is split over up to `saltBuckets` tasks/files. A fresh
   *     table has no loads (no touched scan runs): every bucket is split
   *     `saltBuckets` ways and each part goes to the task Spark's hash
   *     partitioning on (bucket, part) picks. Spreading those parts evenly
@@ -503,9 +503,11 @@ object MergeInto {
     * as one file; one of k parts is split by `pmod(xxhash64(path), k)`.
     *
     * `loads` is each touched bucket's expected row count, -1 when
-    * unknown. A known load over one task's share (the total over
-    * `maxTasks`) is split into as many shares as it holds, at most
-    * `maxWays`, and the parts are packed largest-first onto the
+    * unknown. A known load is split into as many parts as the task
+    * shares (the total over `maxTasks`) it holds, rounded, at least one
+    * and at most `maxWays`: a bucket is split only once it holds 1.5
+    * shares, since a split of one just over a share adds a file and
+    * balances nothing. The parts are packed largest-first onto the
     * least-loaded task (Graham's LPT rule, within 4/3 of the best
     * makespan). An unknown load cannot be packed: it is split `maxWays`
     * ways, and each part goes to the task `repartition(n, bucket, part)`
@@ -516,7 +518,7 @@ object MergeInto {
     import org.apache.spark.unsafe.hash.Murmur3_x86_32.hashInt
     val share = math.max(1.0, loads.values.filter(_ >= 0L).sum.toDouble / maxTasks)
     val ways = loads.map { case (b, load) =>
-      b -> (if (load < 0L) maxWays else math.ceil(load / share).toInt.max(1).min(maxWays))
+      b -> (if (load < 0L) maxWays else math.round(load / share).toInt.max(1).min(maxWays))
     }
     val nTasks = math.min(maxTasks, ways.values.sum).max(1)
     val assigned = Array.fill(nTasks)(0.0)

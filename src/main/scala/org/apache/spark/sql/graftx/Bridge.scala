@@ -68,21 +68,18 @@ object Bridge {
 
   /** Hadoop conf prepared for Spark's OWN vectorized parquet reader
     * ([[org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader]]),
-    * exactly as `ParquetPartitionReaderFactory` prepares it: the requested
-    * Spark schema plus the SQLConf-derived keys `ParquetReadSupport.init`
-    * and `ParquetToSparkSchemaConverter` read without defaults (they
-    * `.toBoolean` raw values — an unset key NPEs). Built on the DRIVER
-    * (SQLConf is driver state), shipped serializable. */
-  def parquetReadConf(spark: org.apache.spark.sql.SparkSession,
-                      requestedSchemaJson: String)
+    * as `ParquetPartitionReaderFactory` prepares it: the SQLConf-derived
+    * keys `ParquetReadSupport.init` and `ParquetToSparkSchemaConverter`
+    * read without defaults (they `.toBoolean` raw values — an unset key
+    * NPEs). The requested schema is per file ([[setRequestedSchema]]).
+    * Built on the DRIVER (SQLConf is driver state), shipped serializable. */
+  def parquetReadConf(spark: org.apache.spark.sql.SparkSession)
       : org.apache.spark.util.SerializableConfiguration = {
     import org.apache.spark.sql.internal.SQLConf
     val sqlConf = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.conf
     val c = new org.apache.hadoop.conf.Configuration(
       spark.sparkContext.hadoopConfiguration)
-    c.set(org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
-      .SPARK_ROW_REQUESTED_SCHEMA, requestedSchemaJson)
     // the MR-style initialize(InputSplit, ctx) path instantiates its
     // ReadSupport from this key (unset → NPE in getReadSupportInstance);
     // Spark's own scans set it via ParquetInputFormat.setReadSupportClass
@@ -106,9 +103,9 @@ object Bridge {
     new org.apache.spark.util.SerializableConfiguration(c)
   }
 
-  /** Swap the requested-schema key of a [[parquetReadConf]]-prepared conf
-    * (per-file rename-era substitution in the columnar graft reader —
-    * the key constant is `private[sql]`). */
+  /** Set the requested Spark schema on a [[parquetReadConf]]-prepared conf
+    * (per file in the graft reader, after rename-era substitution — the
+    * key constant is `private[sql]`). */
   def setRequestedSchema(conf: org.apache.hadoop.conf.Configuration,
                          schemaJson: String): Unit =
     conf.set(org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport

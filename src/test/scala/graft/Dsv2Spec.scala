@@ -644,26 +644,28 @@ class Dsv2Spec extends AnyFunSuite {
 
   // ----- columnar (vectorized) read path --------------------------------
 
-  /** A ColumnarToRow whose subtree holds the BatchScan (whole-stage codegen
+  /** A ColumnarToRow whose subtree holds the DSv2 scan (whole-stage codegen
     * interposes an InputAdapter between them, invisible in treeString). */
-  private def isColumnarScan(df: org.apache.spark.sql.DataFrame): Boolean =
-    df.queryExecution.executedPlan.exists {
+  private def isColumnarPlan(plan: org.apache.spark.sql.execution.SparkPlan): Boolean =
+    plan.exists {
       case c: org.apache.spark.sql.execution.ColumnarToRowExec =>
         c.child.exists {
-          case _: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => true
+          case _: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanExecBase => true
           case _ => false
         }
       case _ => false
     }
+  private def isColumnarScan(df: org.apache.spark.sql.DataFrame): Boolean =
+    isColumnarPlan(df.queryExecution.executedPlan)
 
   test("whole-state scans decode through the vectorized columnar path") {
     val table = build()
     val columnar = spark.read.format("graft").load(table.root)
     assert(isColumnarScan(columnar), "whole-state scan did not plan columnar")
-    val row = spark.read.format("graft").option("columnar", "false").load(table.root)
-    assert(!isColumnarScan(row), "columnar=false still planned columnar")
-    assert(canon(columnar) == canon(row))
-    assert(columnar.count() == row.count())
+    // reference: Spark's own parquet source over the same files
+    val ref = table.read()
+    assert(canon(columnar) == canon(ref))
+    assert(columnar.count() == ref.count())
   }
 
   test("columnar path filters tombstones via the selection wrapper (mixed batches)") {
@@ -683,15 +685,15 @@ class Dsv2Spec extends AnyFunSuite {
     }.toDF("lsn", "op", "ts", "repo", "path", "commit", "lang", "content")
     merge.apply(dels, 779L)
     val columnar = spark.read.format("graft").load(table.root)
-    val row = spark.read.format("graft").option("columnar", "false").load(table.root)
-    assert(isColumnarScan(columnar) && !isColumnarScan(row))
-    assert(canon(columnar) == canon(row))
+    val ref = table.read()
+    assert(isColumnarScan(columnar))
+    assert(canon(columnar) == canon(ref))
     val gone = victims.toSet
     assert(columnar.select("repo", "path").collect()
       .forall(r => !gone((r.getString(0), r.getString(1)))))
     // projections and aggregates over the selected batches stay exact
     assert(columnar.agg(sum(length(col("content")))).head.getLong(0) ==
-      row.agg(sum(length(col("content")))).head.getLong(0))
+      ref.agg(sum(length(col("content")))).head.getLong(0))
   }
 
   test("columnar path: includeTombstones, schema evolution, byte-range splits") {
@@ -709,45 +711,62 @@ class Dsv2Spec extends AnyFunSuite {
       "body", "MIT")).toDF("lsn", "op", "ts", "repo", "path", "commit", "lang",
       "content", "license"), 781L)
 
-    def both(opts: Map[String, String]): (org.apache.spark.sql.DataFrame,
-        org.apache.spark.sql.DataFrame) = {
-      def rd(extra: (String, String)*) = {
-        var r = spark.read.format("graft")
-        (opts ++ extra).foreach { case (k, v) => r = r.option(k, v) }
-        r.load(table.root)
-      }
-      (rd(), rd("columnar" -> "false"))
+    def rd(opts: (String, String)*) = {
+      var r = spark.read.format("graft")
+      opts.foreach { case (k, v) => r = r.option(k, v) }
+      r.load(table.root)
     }
-    // tombstones surfaced: no filtering, `_deleted` is ordinary data
-    val (ct, rt) = both(Map("includeTombstones" -> "true"))
+    // tombstones surfaced: no filtering, `_deleted` is ordinary data;
+    // reference: every physical row through Spark's parquet source
+    val snap = table.currentSnapshot().get
+    val ct = rd("includeTombstones" -> "true")
+    val rt = table.readFiles(snap.schema, snap.allFiles)
     assert(isColumnarScan(ct))
     assert(ct.where(col(LakeTable.DeletedCol)).count() > 0)
     assert(canon(ct.drop(LakeTable.DeletedCol)) == canon(rt.drop(LakeTable.DeletedCol)))
-    // evolution: null-filled license column agrees with the row path
-    val (ce, re) = both(Map.empty)
+    // evolution: null-filled license column agrees with the reference
+    val (ce, re) = (rd(), table.read())
     assert(ce.where(col("license").isNull).count() ==
       re.where(col("license").isNull).count())
     assert(canon(ce) == canon(re))
     // byte-range splits keep the vectorized path and read each row once
     assert(Maintenance.compact(table, maxFilesPerBucket = 1) > 0)
-    val (cs, rs) = both(Map("maxSplitBytes" -> "4096"))
+    val (cs, rs) = (rd("maxSplitBytes" -> "4096"), table.read())
     assert(isColumnarScan(cs))
     assert(canon(cs) == canon(rs))
   }
 
-  test("lsn-bounded and point-lookup scans stay on the row reader (pushed filters)") {
+  test("every DSv2 scan plans columnar: repo =, lsn >, changesFrom, streaming micro-batch") {
     val table = build()
     val repo = table.read().select("repo").limit(1).collect().head.getString(0)
-    assert(!isColumnarScan(
-      spark.read.format("graft").load(table.root).where(col("repo") === repo)))
-    assert(!isColumnarScan(
-      spark.read.format("graft").load(table.root).where(col("lsn") > 5L)))
-    // changesFrom (batch CDC) carries a row bound → row path
+    val byRepo = spark.read.format("graft").load(table.root).where(col("repo") === repo)
+    assert(isColumnarScan(byRepo))
+    assert(canon(byRepo) == canon(table.read().where(col("repo") === repo)))
+
+    val mid = table.read().agg(expr("percentile_approx(lsn, 0.5)")).collect().head.getLong(0)
+    val byLsn = spark.read.format("graft").load(table.root).where(col("lsn") > mid)
+    assert(isColumnarScan(byLsn))
+    assert(canon(byLsn) == canon(table.read().where(col("lsn") > mid)))
+
+    // changesFrom carries a row bound the reader enforces; projecting the
+    // keys only makes `lsn` a filter-only column
     val v = table.currentSnapshot().get.version
-    if (v > 0) {
-      assert(!isColumnarScan(spark.read.format("graft")
-        .option("changesFrom", "0").load(table.root)))
-    }
+    val changes = spark.read.format("graft").option("changesFrom", v - 1).load(table.root)
+      .select("repo", "path")
+    assert(isColumnarScan(changes))
+    def keys(df: org.apache.spark.sql.DataFrame) =
+      df.select("repo", "path").orderBy("repo", "path").collect().map(_.toString).toSeq
+    val wantKeys = keys(Maintenance.changesBetween(table, v - 1, v)
+      .where(col("_change_type").isin("insert", "update_postimage")))
+    assert(keys(changes) == wantKeys && wantKeys.nonEmpty)
+
+    // a streaming micro-batch: the first one backfills the visible state
+    val work = TestSpark.tmpDir("dsv2colstream")
+    val (rows, q) = runStream(table.root, s"$work/cp", s"$work/out")
+    val exec = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime
+      .StreamingQueryWrapper].streamingQuery.lastExecution
+    assert(exec != null && isColumnarPlan(exec.executedPlan), s"${exec.executedPlan}")
+    assert(rows.map(_.toString).sorted == table.read().collect().map(_.toString).toSeq.sorted)
   }
 
   test("compaction + stats keep DSv2 lsn-pruned reads empty of data IO") {
@@ -1391,6 +1410,43 @@ class Dsv2Spec extends AnyFunSuite {
     assert(plannedFiles(one) < plannedFiles(all))
     assert(one.select("repo").head.getString(0) == "zrepo")
     assert(v3 == v2 + 1)
+
+    // an epoch of deletes and updates above the bound: each bucket it
+    // touches is rewritten whole, so its new file mixes carried rows
+    // below the bound with tombstones and updates above it, and the lsn
+    // bound and the tombstone filter meet in one batch
+    val live = table.read().select("repo", "path").orderBy("repo", "path")
+      .collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    val events = live.zipWithIndex.collect {
+      case ((r, p), i) if i % 7 == 0 => (5000000L + i, r, p, "", "D")
+      case ((r, p), i) if i % 7 == 3 => (5000000L + i, r, p, s"upd-$i", "U")
+    }
+    assert(events.exists(_._5 == "D") && events.exists(_._5 == "U"))
+    new MergeInto(table, numBuckets = 4, saltBuckets = 2, recordMeta = false).apply(
+      events.toDF("lsn", "repo", "path", "content", "op"), 4343L)
+    val v4 = table.currentSnapshot().get.version
+    assert(v4 == v3 + 1)
+    val hw = table.snapshotAt(v3).highWaterLsn.get
+    val snap4 = table.currentSnapshot().get
+    val written = snap4.allFiles
+      .filter(_.relPath.startsWith(s"data/${snap4.summary.flatMap(_.writeDir).get}/"))
+    assert(written.exists(f => f.minLsn <= hw && f.maxLsn > hw),
+      "premise: a rewritten file must carry rows below the bound")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("repo", "path", "lsn").collect().map(_.toString).toSeq
+    val changes = Maintenance.changesBetween(table, v3, v4)
+    val liveGot = rows(spark.read.format("graft").option("changesFrom", v3).load(table.root)
+      .select("repo", "path", "lsn", "content"))
+    val liveWant = rows(changes.where(col("_change_type").isin("insert", "update_postimage"))
+      .select("repo", "path", "lsn", "content"))
+    assert(liveGot == liveWant && liveGot.size == events.count(_._5 == "U"))
+    // includeTombstones: every change, deletes as `_deleted` rows
+    val allGot = rows(spark.read.format("graft").option("changesFrom", v3)
+      .option("includeTombstones", "true").load(table.root)
+      .select("repo", "path", "lsn", LakeTable.DeletedCol))
+    val allWant = rows(changes.select(col("repo"), col("path"), col("lsn"),
+      (col("_change_type") === "delete").as(LakeTable.DeletedCol)))
+    assert(allGot == allWant && allGot.size == events.size)
   }
 
   test("CDC relay: readStream from table A through the graft sink converges table B to A") {

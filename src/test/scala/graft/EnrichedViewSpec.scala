@@ -53,9 +53,11 @@ class EnrichedViewSpec extends AnyFunSuite {
     val s2 = EnrichedView.refresh(base, view, enrichWith(d), numBuckets = 4, saltBuckets = 2)
     assert(s2.noOp && s2.merge.isEmpty)
 
-    // advance the base (updates + deletes + inserts), refresh incrementally
-    BatchReplay.replay(spark, s"$work/logAll", base, numBuckets = 4, saltBuckets = 2,
-      recordMeta = false)
+    // advance the base (updates + deletes + inserts), refresh incrementally;
+    // at 8 tasks each of the 4 buckets holds two shares of the epoch and
+    // is written as 2 files, so the compaction below has work
+    TestSpark.withShufflePartitions(8)(BatchReplay.replay(spark, s"$work/logAll", base,
+      numBuckets = 4, saltBuckets = 2, recordMeta = false))
     val d2 = dim(base)
     val s3 = EnrichedView.refresh(base, view, enrichWith(d2), numBuckets = 4, saltBuckets = 2)
     assert(!s3.initialFull && !s3.noOp)

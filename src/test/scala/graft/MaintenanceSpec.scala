@@ -11,18 +11,25 @@ import org.scalatest.funsuite.AnyFunSuite
 class MaintenanceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  private def replayed(nEvents: Long, nBatches: Int): (LakeTable, GenConfig) = {
+  private def replayed(nEvents: Long, nBatches: Int,
+                       shufflePartitions: Option[Int] = None): (LakeTable, GenConfig) = {
     val cfg = GenConfig(nEvents = nEvents)
     val work = TestSpark.tmpDir("maint")
     ChangeGen.writeLog(spark, cfg, s"$work/log", nBatches = nBatches, partitions = 2)
     val table = new LakeTable(spark, s"$work/table")
-    BatchReplay.replay(spark, s"$work/log", table, numBuckets = 4, saltBuckets = 2,
-      recordMeta = false)
+    def replay() = BatchReplay.replay(spark, s"$work/log", table, numBuckets = 4,
+      saltBuckets = 2, recordMeta = false)
+    shufflePartitions match {
+      case Some(n) => TestSpark.withShufflePartitions(n)(replay())
+      case None => replay()
+    }
     (table, cfg)
   }
 
   test("compaction: fewer files, identical visible state, old snapshot intact") {
-    val (table, _) = replayed(2000L, 5)
+    // each of the 4 buckets holds two of 8 tasks' shares of an epoch, so
+    // every epoch writes it as 2 files: compaction has small files to merge
+    val (table, _) = replayed(2000L, 5, shufflePartitions = Some(8))
     val before = table.currentSnapshot().get
     val stateBefore = table.read().orderBy("repo", "path").collect().map(_.toString).toSeq
     assert(before.allFiles.size > before.numBuckets, "test needs small files to compact")
@@ -473,7 +480,8 @@ class MaintenanceSpec extends AnyFunSuite {
   }
 
   test("expireSnapshots: reclaims exclusively-old storage, retained history intact") {
-    val (table, _) = replayed(1500L, 4) // versions 0..3
+    // at 8 tasks each bucket is written as 2 files, so compaction has work
+    val (table, _) = replayed(1500L, 4, shufflePartitions = Some(8)) // versions 0..3
     Maintenance.compact(table, maxFilesPerBucket = 1) // version 4 rewrites everything
     val versions = table.snapshotVersions()
     assert(versions.size == 5)
@@ -518,7 +526,8 @@ class MaintenanceSpec extends AnyFunSuite {
   }
 
   test("stats pruning: a compaction-only version diff reads zero data files") {
-    val (table, _) = replayed(1500L, 3)
+    // at 8 tasks each bucket is written as 2 files, so compaction has work
+    val (table, _) = replayed(1500L, 3, shufflePartitions = Some(8))
     val v1 = table.currentSnapshot().get.version
     assert(Maintenance.compact(table, maxFilesPerBucket = 1) > 0)
     val v2 = table.currentSnapshot().get.version

@@ -249,6 +249,15 @@ class WriteStatsSpec extends AnyFunSuite {
     assert(table.read().count() == 4000L)
   }
 
+  test("near-uniform known loads on as many tasks are written one part per bucket") {
+    // each bucket within a quarter share of the mean: none is split, and
+    // the four go to four different tasks
+    val plan = MergeInto.planTasks(Map(0 -> 1000L, 1 -> 1100L, 2 -> 950L, 3 -> 1050L),
+      maxTasks = 4, maxWays = 4)
+    assert(plan.keySet == Set(0, 1, 2, 3) && plan.values.forall(_.size == 1), plan)
+    assert(plan.values.map(_.head).toSet == Set(0, 1, 2, 3), plan)
+  }
+
   test("parts of unknown load go where a hash repartition on (bucket, part) sends them") {
     import spark.implicits._
     // a fresh table's plan: every load unknown, every bucket split 4 ways
